@@ -347,8 +347,11 @@ def main() -> int:
                 queries["scan_parquet"], "__wrapped__", queries["scan_parquet"]
             )
             _warm(spark, SF_DIR).count()
-        except Exception:
-            pass
+        except Exception as exc:
+            print(
+                f"bench: warm-up key scan_parquet skipped: {exc!r}",
+                file=sys.stderr,
+            )
         sweep: dict[str, float] = {}
         for name in sorted(queries):
             fresh = getattr(queries[name], "__wrapped__", queries[name])

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.cache import Cache
 from engine.registry import query
 from engine.tables import load
 
@@ -328,10 +329,10 @@ _KMEANS_CTES = """
 """
 
 
-# Built assignment plans per (session, corpus): the centroid fit is
+# Built assignment plans per embeddings file version: the centroid fit is
 # deterministic, and both emb_kmeans_lloyd and dedup_semdedup need it —
 # caching the plan skips repeating the two bounded centroid collects.
-_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
+_ASSIGNMENTS = Cache(16)
 
 
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,10 +350,14 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     See emb_kmeans_lloyd for the determinism contract; dedup_semdedup
     reuses these clusters as its semantic blocking structure."""
-    ck = (spark, sf_dir)
-    cached = _ASSIGN_CACHE.get(ck)
-    if cached is not None:
-        return cached
+    return _ASSIGNMENTS.get(
+        [f"{sf_dir}/embeddings.parquet"],
+        lambda: _kmeans_assign(spark, sf_dir),
+        spark=spark,
+    )
+
+
+def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from engine.tables import vectors
 
     # vectors(): NULL and wrong-dim embeddings are un-embeddable in the
@@ -378,9 +383,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cid", "pos")
         .agg(F.round(F.avg("col"), 8).alias("v"))
     )
-    out = _assign_step(emb, _rebuild_centroids(c0, c1m))
-    _ASSIGN_CACHE[ck] = out
-    return out
+    return _assign_step(emb, _rebuild_centroids(c0, c1m))
 
 
 def _assign_step(pts: DataFrame, cents: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from engine.cache import Cache
 from engine.registry import query
 from engine.tables import load
 
@@ -513,92 +514,41 @@ _MAX_BROADCAST_VECTORS = 1_000_000  # float32 broadcast budget (~0.25 GB at dim 
 # (path, mtime_ns, nrows) identity _broadcast_side stamps. PySpark's
 # worker re-registers each broadcast per TASK (a fresh Broadcast(path=…)
 # whose pickle is re-loaded on .value), so with python-worker reuse every
-# task of every collect() re-paid the full matrix deserialization — the
-# width-4 spread paid it 4× per run (VERDICT r10 item 3). A module-level
-# dict lives in the reused worker process, so only the first task per
-# worker per corpus loads the pickle; everything after is a dict hit.
-# Bounded by BYTES, not entries (r11 review): a corpus near the 1M-vector
-# gate is ~0.25 GB as f32, so an entry-count cap could pin ~1 GB per reused
-# worker for the application lifetime. FIFO-evict until the new entry fits.
-_SIDE_CACHE: dict[tuple, tuple] = {}
-_SIDE_CACHE_MAX_BYTES = 256 * 1024 * 1024
+# task of every collect() re-paid the full matrix deserialization. Living
+# in the reused worker process, only the first task per worker per corpus
+# loads the pickle. Bounded by BYTES: a corpus near the 1M-vector gate is
+# ~0.25 GB as f32.
+_SIDES = Cache(
+    max_bytes=256 * 1024 * 1024,
+    weigh=lambda v: sum(int(getattr(a, "nbytes", 0)) for a in v),
+)
 
 
 def _side_value(bc, key):
     """Worker-side accessor: cached (ids, matrix), loading bc.value only
     on the first task a worker process sees for this corpus."""
-    if key is not None:
-        hit = _SIDE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    val = bc.value
-    if key is not None:
-        nbytes = int(getattr(val[0], "nbytes", 0)) + int(
-            getattr(val[1], "nbytes", 0)
-        )
-        if nbytes <= _SIDE_CACHE_MAX_BYTES:
-            held = sum(
-                int(getattr(v[0], "nbytes", 0)) + int(getattr(v[1], "nbytes", 0))
-                for v in _SIDE_CACHE.values()
-            )
-            while _SIDE_CACHE and held + nbytes > _SIDE_CACHE_MAX_BYTES:
-                old = _SIDE_CACHE.pop(next(iter(_SIDE_CACHE)))
-                held -= int(getattr(old[0], "nbytes", 0)) + int(
-                    getattr(old[1], "nbytes", 0)
-                )
-            _SIDE_CACHE[key] = val
-    return val
+    if key is None:
+        return bc.value
+    return _SIDES.get((), lambda: bc.value, key)
 
 
-# Driver-side cache of the Broadcast OBJECT itself, keyed by
-# (applicationId, side_key): repeated blocked-matmul queries in one session
-# previously re-pickled and re-published the same (ids, matrix) pair per
-# invocation (~15-20 ms warm at sf0.1 — measured r11). A session reusing the
-# broadcast is the driver-side twin of the worker _SIDE_CACHE. Evicted
-# entries are dropped without destroy(): a running plan may still hold the
-# broadcast, and Spark's ContextCleaner reclaims it on GC. Keyed by
-# applicationId so a restarted session never sees a stale handle; inserts
-# drop entries of other (stopped) applications, mirroring swap_persist,
-# so cycling SparkSessions can't pin dead broadcasts until FIFO eviction.
-_BC_CACHE: dict[tuple, object] = {}
-_BC_CACHE_MAX = 4
+# Driver-side cache of the Broadcast OBJECT itself: repeated blocked-matmul
+# queries in one application reuse one published (ids, matrix) pair
+# instead of re-pickling it per invocation. Evicted handles are dropped
+# without destroy(): a running plan may still hold the broadcast, and
+# Spark's ContextCleaner reclaims it on GC.
+_BROADCASTS = Cache(4)
 
 
 def _side_broadcast(spark, sf_dir: str, emb) -> tuple:
-    """(Broadcast[(ids, f32 matrix)], side_key) — cached per session+corpus.
+    """(Broadcast[(ids, f32 matrix)], side_key), cached per embeddings
+    file version: a hit skips both the parquet read and the publish."""
 
-    A hit skips both the parquet read and the broadcast publish: the key
-    (path, mtime_ns, nrows) is computed from the footer + stat alone, the
-    same identity _broadcast_side stamps, so a rewritten corpus misses.
-    side_key None (toPandas fallback: corpus identity unprovable) always
-    builds a fresh broadcast."""
-    try:
-        import os
+    def publish() -> tuple:
+        b_ids, b_mat, side_key = _broadcast_side(spark, sf_dir, emb)
+        return spark.sparkContext.broadcast((b_ids, b_mat)), side_key
 
-        from engine.tables import parquet_num_rows
-
-        path = f"{sf_dir}/embeddings.parquet"
-        n = parquet_num_rows(path)
-        if n is not None and n <= _MAX_BROADCAST_VECTORS:
-            side_key = (os.path.abspath(path), os.stat(path).st_mtime_ns, int(n))
-            ck = (spark.sparkContext.applicationId, side_key)
-            bc = _BC_CACHE.get(ck)
-            if bc is not None:
-                return bc, side_key
-    except Exception:
-        pass
-    b_ids, b_mat, side_key = _broadcast_side(spark, sf_dir, emb)
-    if side_key is None:
-        return spark.sparkContext.broadcast((b_ids, b_mat)), None
-    app = spark.sparkContext.applicationId
-    ck = (app, side_key)
-    bc = spark.sparkContext.broadcast((b_ids, b_mat))
-    for k in [k for k in _BC_CACHE if k[0] != app]:
-        _BC_CACHE.pop(k, None)
-    if len(_BC_CACHE) >= _BC_CACHE_MAX:
-        _BC_CACHE.pop(next(iter(_BC_CACHE)))
-    _BC_CACHE[ck] = bc
-    return bc, side_key
+    return _BROADCASTS.get([f"{sf_dir}/embeddings.parquet"], publish, spark=spark)
 
 
 def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
@@ -612,9 +562,9 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
     quantize values and break bit-identity with the oracle's f64 dots).
     Every kernel consuming this side is dtype-agnostic (numpy upcasts at
     the refine gather). cache_key identifies the corpus bytes
-    (path, mtime_ns, nrows) for the per-worker _SIDE_CACHE; None when the
+    (path, mtime_ns, nrows) for the per-worker _SIDES cache; None when the
     source isn't a stat-able path (toPandas fallback) — then every task
-    loads bc.value as before.
+    loads bc.value.
 
     Direct pyarrow read of the shared-path parquet — the same bytes the
     executors scan — skips paying a Spark collect job; falls back to

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine.cache import Cache, fixture, replay_fixture
 from engine.registry import query
 from engine.tables import load, sftag
 
@@ -141,14 +142,7 @@ def stream_session_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # true Structured Streaming (ROWS — engine-internal semantics)
 # ---------------------------------------------------------------------------
 
-# Deterministic per-corpus setup caches (r05 sweep-cost trim): the schema
-# probe, the symlink source dir, and the late-data replay files depend only
-# on sf_dir, so re-running a streaming key re-uses them instead of paying a
-# footer-probe job / mkdir / three batch writes per run. Every timed run
-# still executes a REAL streaming query (fresh checkpoint + state store).
-_SCHEMA_CACHE: dict[str, tuple[T.StructType, bool]] = {}
-_SRC_DIR_CACHE: dict[str, str] = {}
-_LATE_SRC_CACHE: dict[str, str] = {}
+_RAW_SCHEMAS = Cache()
 _CKPT_ROOT: list[str] = []  # one shared checkpoint root per process
 
 
@@ -156,12 +150,14 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> tuple[T.StructType, 
     """Raw file-source schema for events + whether ts needs the nanos→ntz
     conversion. The corpus's ts physical type has varied across generations
     (int64 nanos vs native timestamp[us]); probe the batch reader's
-    footer-derived dtype once per corpus so the streaming source matches
-    either."""
-    cached = _SCHEMA_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
-    ts_dtype = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
+    footer-derived dtype once per file version so the streaming source
+    matches either."""
+    path = f"{sf_dir}/events.parquet"
+    return _RAW_SCHEMAS.get([path], lambda: _probe_raw_schema(spark, path))
+
+
+def _probe_raw_schema(spark: SparkSession, path: str) -> tuple[T.StructType, bool]:
+    ts_dtype = dict(spark.read.parquet(path).dtypes).get("ts")
     # Match KNOWN corpus variants only: a third variant (e.g. UTC-adjusted
     # timestamp[us], batch dtype 'timestamp') must fail loudly here rather
     # than let a pinned NTZ readStream schema silently shift event time.
@@ -182,7 +178,6 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> tuple[T.StructType, 
             T.StructField("props", T.StringType()),
         ]
     )
-    _SCHEMA_CACHE[sf_dir] = (schema, ts_is_long)
     return schema, ts_is_long
 
 
@@ -209,11 +204,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(src):
         d = src  # Spark-written dataset: monitor the part-file dir itself
     else:
-        d = _SRC_DIR_CACHE.get(sf_dir)
-        if d is None:
-            d = scratch_dir(prefix="sg-events-src-")
-            os.symlink(src, f"{d}/events.parquet")
-            _SRC_DIR_CACHE[sf_dir] = d
+        d = fixture(
+            "sg-events-src-",
+            [src],
+            ["events.parquet"],
+            lambda d: os.symlink(src, f"{d}/events.parquet"),
+        )
     raw = spark.readStream.schema(schema).format("parquet").load(d)
     if ts_is_long:
         return raw.withColumn(
@@ -233,7 +229,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bounded source's row count — rather than sit at a constant tuned
 # for either local mode or one cluster size.
 _STREAM_ROWS_PER_INSTANCE = 25_000
-_DERIVED_PARTS_CACHE: dict[str, int] = {}
+_SOURCE_PARTS = Cache()
 
 
 def _derived_stream_parts(spark: SparkSession, sf_dir: str) -> int:
@@ -246,13 +242,15 @@ def _derived_stream_parts(spark: SparkSession, sf_dir: str) -> int:
     laptop doesn't. SPARK_GRAFT_STREAM_PARTS still wins over everything
     (the cluster-sizing contract) — a production operator who KNOWS the
     keys-in-horizon sets it directly."""
-    got = _DERIVED_PARTS_CACHE.get(sf_dir)
-    if got is None:
-        from engine.tables import parquet_num_rows
+    from engine.tables import parquet_num_rows
 
-        n = parquet_num_rows(f"{sf_dir}/events.parquet")
-        got = 4 if n is None else max(2, -(-int(n) // _STREAM_ROWS_PER_INSTANCE))
-        _DERIVED_PARTS_CACHE[sf_dir] = got
+    path = f"{sf_dir}/events.parquet"
+
+    def parts() -> int:
+        n = parquet_num_rows(path)
+        return 4 if n is None else max(2, -(-int(n) // _STREAM_ROWS_PER_INSTANCE))
+
+    got = _SOURCE_PARTS.get([path], parts)
     try:
         ceiling = 2 * spark.sparkContext.defaultParallelism
     except Exception:
@@ -422,8 +420,6 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day: this is the state-eviction contract — without the watermark
     bound, window state grows O(stream); with it, state is O(windows per
     horizon) and late arrivals cost nothing."""
-    import os
-
     from engine.session import tune
 
     tune(spark)
@@ -432,26 +428,16 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
-    # The three replay files are a deterministic function of the corpus —
-    # build them once per sf_dir (r05: re-running this key previously paid
-    # three batch write jobs per run, pure sweep overhead).
-    src = _LATE_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = scratch_dir(prefix=f"sg-late-src-{sftag(sf_dir)}-")
-        for i, part in enumerate(
-            [
-                e.filter((F.col("ts") >= cutoff) & (F.col("ts") < gap)),
-                e.filter(F.col("ts") >= gap),
-                e.filter(F.col("ts") < cutoff),
-            ]
-        ):
-            sub = scratch_dir(prefix=f"sg-late-part{i}-")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            name = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
-            dest = f"{src}/batch{i}.parquet"
-            os.rename(f"{sub}/{name}", dest)
-            os.utime(dest, (1_000_000 + i * 1000,) * 2)  # replay order = file order
-        _LATE_SRC_CACHE[sf_dir] = src
+    src = replay_fixture(
+        f"sg-late-src-{sftag(sf_dir)}-",
+        [f"{sf_dir}/events.parquet"],
+        3,
+        lambda: [
+            e.filter((F.col("ts") >= cutoff) & (F.col("ts") < gap)),
+            e.filter(F.col("ts") >= gap),
+            e.filter(F.col("ts") < cutoff),
+        ],
+    )
     s = (
         spark.readStream.schema("event_id long, ts timestamp, user_id long")
         .option("maxFilesPerTrigger", "1")

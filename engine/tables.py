@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from engine.cache import Cache
+
 TABLES = [
     "region",
     "nation",
@@ -145,7 +147,7 @@ def sftag(sf_dir: str) -> str:
     return "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
 
 
-_EMB_DIM_CACHE: dict[tuple, "int | None"] = {}
+_EMB_DIMS = Cache()
 
 # SQL twin of emb_dim() for the vector-family oracles: the corpus's modal
 # embedding dimensionality (ties broken to the smaller dim). DuckDB scalar
@@ -159,26 +161,10 @@ VEC_DIM_SQL = (
 
 def emb_dim(spark: SparkSession, sf_dir: str) -> "int | None":
     """Modal embedding dimensionality of the corpus (ties to the smaller
-    dim) — ONE tiny columnar agg job, cached per (applicationId, sf_dir,
-    mtime_ns, footer_rows) like the footer-row probe (r14 ADVICE: keying
-    only on (app, sf_dir) went stale when a rehearsal rewrote
-    embeddings.parquet in place within one session — vectors() then
-    silently filtered to the WRONG subspace); None on an all-NULL/empty
-    corpus. A missing/unstat-able file keys on (None, None): such a
-    corpus can't be rewritten in place, and the probe below raises its
-    own read error if truly absent."""
-    import os
+    dim) — ONE tiny columnar agg job per embeddings file version; None on
+    an all-NULL/empty corpus."""
 
-    app = spark.sparkContext.applicationId
-    path = f"{sf_dir}/embeddings.parquet"
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (app, sf_dir, mtime, parquet_num_rows(path))
-    if key not in _EMB_DIM_CACHE:
-        for k in [k for k in _EMB_DIM_CACHE if k[0] != app]:
-            _EMB_DIM_CACHE.pop(k, None)
+    def probe() -> "int | None":
         row = (
             load(spark, sf_dir, "embeddings")
             .filter(F.col("embedding").isNotNull())
@@ -187,8 +173,9 @@ def emb_dim(spark: SparkSession, sf_dir: str) -> "int | None":
             .orderBy(F.col("count").desc(), F.col("d"))
             .first()
         )
-        _EMB_DIM_CACHE[key] = None if row is None else int(row["d"])
-    return _EMB_DIM_CACHE[key]
+        return None if row is None else int(row["d"])
+
+    return _EMB_DIMS.get([f"{sf_dir}/embeddings.parquet"], probe)
 
 
 def vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,7 +227,7 @@ def lit_table(spark: SparkSession, rows: list, cols: list[str]) -> DataFrame:
     return spark.sql(f"SELECT * FROM (VALUES {values}) AS t({', '.join(cols)})")
 
 
-_CACHE: dict[tuple, DataFrame] = {}
+_LOADED = Cache(256)
 
 
 def parquet_num_rows(path: str) -> int | None:
@@ -270,18 +257,19 @@ def parquet_num_rows(path: str) -> int | None:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table with its pinned schema.
 
-    The returned DataFrame is a lazy, immutable logical plan — safe to cache
-    and share across queries in the same session. Caching skips the repeated
-    footer read + analysis round-trips that otherwise dominate sub-second
-    queries (no data is pinned; execution stays streaming)."""
-    key = (spark, sf_dir, name)
-    cached = _CACHE.get(key)
-    if cached is not None:
-        return cached
+    The returned DataFrame is a lazy, immutable logical plan, cached per
+    file version and shared across queries of the application. Caching
+    skips the repeated footer read + analysis round-trips that otherwise
+    dominate sub-second queries (no data is pinned; execution stays
+    streaming)."""
+    path = f"{sf_dir}/{name}.parquet"
+    return _LOADED.get([path], lambda: _read(spark, path, name), spark=spark)
+
+
+def _read(spark: SparkSession, path: str, name: str) -> DataFrame:
     from engine.session import tune
 
     tune(spark)
-    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # The raw ts physical type has varied across corpus generations:
         # int64 nanos (needs timestamp_micros(ts div 1000); `div` is integer
@@ -294,33 +282,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ts = F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
         else:
             ts = F.col("ts").cast("timestamp_ntz")
-        df = raw.withColumn("ts", ts).select(
+        return raw.withColumn("ts", ts).select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-    else:
-        df = spark.read.schema(SCHEMAS[name]).parquet(path)
-    _CACHE[key] = df
-    return df
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 # ---------------------------------------------------------------------------
 # exact-dup collapse shared machinery (r11 review consolidation)
 # ---------------------------------------------------------------------------
 
-# Probe results memoized per (applicationId, path, mtime_ns, nrows, col): the
-# probe is a full countDistinct scan, and each collapse-family key
-# (sim_ann_ivf, dedup_semdedup, emb_kmeans_lloyd, dedup_ngram_jaccard) runs
-# it on every invocation otherwise — a bench sweep paid several extra corpus
-# scans per round.
-_PROBE_CACHE: dict[tuple, bool] = {}
-_PROBE_CACHE_MAX = 64
+# Probe results per (file version, column): the probe is a full
+# countDistinct scan that each collapse-family key would otherwise repeat
+# on every invocation.
+_DISTINCT_PROBES = Cache()
 
-# Persisted collapse relations per (applicationId, tag): the returned plans
-# read their dup-group relation lazily, so the persist can't be scoped in
-# the query function — each new invocation swaps out the previous one
-# (ADVICE r10), and entries from other applications (stopped sessions) are
-# evicted so a process cycling SparkSessions doesn't pin dead wrappers.
-_COLLAPSE_PERSISTED: dict[tuple, DataFrame] = {}
+# Persisted collapse relations per tag: the returned plans read their
+# dup-group relation lazily, so the persist can't be scoped in the query
+# function — each new invocation swaps out the previous one.
+_SWAPPED = Cache(on_evict=lambda df: df.unpersist(blocking=False))
 
 
 def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -> bool:
@@ -329,48 +309,26 @@ def all_rows_distinct(spark: SparkSession, path: str, df: DataFrame, col: str) -
     (no readable footer): callers route to their collapse path, whose
     grouping key is the full column value — a hash collision or missing
     footer only costs work, never correctness (collisions UNDER-count)."""
-    import os
-
     n = parquet_num_rows(path)
     if n is None:
         return False
-    try:
-        ck = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            os.stat(path).st_mtime_ns,
-            int(n),
-            str(col),
-        )
-    except OSError:
-        return False
-    hit = _PROBE_CACHE.get(ck)
-    if hit is None:
+
+    def probe() -> bool:
         nd = (
             df.select(F.xxhash64(col).alias("h"))
             .agg(F.count_distinct("h"))
             .first()[0]
         )
-        hit = nd == n
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        _PROBE_CACHE[ck] = hit
-    return hit
+        return nd == n
+
+    return _DISTINCT_PROBES.get([path], probe, str(col))
 
 
 def swap_persist(spark: SparkSession, df: DataFrame, tag: str) -> DataFrame:
-    """Persist MEMORY_AND_DISK under (applicationId, tag), unpersisting
-    the previous relation stored under the same key and dropping entries
-    of other (stopped) applications. At most one cached relation per tag
-    per live session."""
+    """Persist MEMORY_AND_DISK under ``tag``, unpersisting the relation
+    it replaces. At most one cached relation per tag per application."""
     from pyspark import StorageLevel
 
-    app = spark.sparkContext.applicationId
-    prev = _COLLAPSE_PERSISTED.pop((app, tag), None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    for k in [k for k in _COLLAPSE_PERSISTED if k[0] != app]:
-        _COLLAPSE_PERSISTED.pop(k, None)
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _COLLAPSE_PERSISTED[(app, tag)] = out
+    _SWAPPED.put(out, tag, spark=spark)
     return out

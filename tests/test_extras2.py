@@ -85,3 +85,36 @@ def test_heavy_hitters_mg_vectorized_no_false_negatives():
             f"hit{j}" in survivors
         ), f"hit{j} (count 100 > {n}/(k+1)={n/(k+1):.1f}) must survive MG"
     assert len(survivors) <= k
+
+
+def test_foreachbatch_upsert_rebuilds_a_partial_replay_fixture(
+    spark, tmp_path, monkeypatch
+):
+    """A replay fixture missing one of its batch files is rebuilt, not
+    replayed short: a dir-exists check alone silently merged 2 of the 3
+    batches on the next call."""
+    import os
+    import shutil
+
+    import engine.extras2 as extras2
+    from engine import tmpdirs
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    shutil.copy(f"{SF_DIR}/events.parquet", corpus / "events.parquet")
+    created: list[str] = []
+    real = tmpdirs.scratch_dir
+
+    def recording(prefix):
+        d = real(prefix)
+        created.append(d)
+        return d
+
+    monkeypatch.setattr(tmpdirs, "scratch_dir", recording)
+    monkeypatch.setattr(extras2, "scratch_dir", recording)
+    fn = extras2.stream_foreachbatch_upsert.__wrapped__
+    first = sorted(map(tuple, fn(spark, str(corpus)).collect()))
+    replay = [d for d in created if os.path.exists(f"{d}/batch1.parquet")]
+    assert len(replay) == 1
+    os.remove(f"{replay[0]}/batch1.parquet")
+    assert sorted(map(tuple, fn(spark, str(corpus)).collect())) == first

@@ -604,28 +604,36 @@ def test_auto_compaction_bounds_increment_count(spark, tmp_path):
     assert man(auto_base) == man(raw_base)
 
 
-def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
-    """A build_refresh_index failure (disk full, killed job) must not
-    leak the freshly-created index dir: it never reaches _INDEX_CACHE,
-    so neither superseded-eviction nor the atexit hook would ever see it
-    — the cleanup has to happen on the failure path itself. The check
-    records the dirs THIS call creates (wrapping scratch_dir) rather
-    than globbing /tmp, which raced concurrent test/bench processes
-    creating their own index dirs."""
-    import pytest as _pytest
+def _fresh_fixtures(monkeypatch) -> tuple:
+    """Route fixture builds into an empty store and record the dirs they
+    allocate (wrapping scratch_dir rather than globbing /tmp, which raced
+    concurrent test/bench processes creating their own index dirs)."""
+    from engine import cache, tmpdirs
 
-    import engine.pipeline6 as p6
-    from engine.tmpdirs import scratch_dir as real_scratch
-
-    monkeypatch.setattr(p6, "_INDEX_CACHE", {})
+    fresh = cache.Cache(on_evict=cache._rmtree)
+    monkeypatch.setattr(cache, "_FIXTURES", fresh)
     created: list[str] = []
+    real = tmpdirs.scratch_dir
 
-    def recording_scratch(prefix):
-        d = real_scratch(prefix)
+    def recording(prefix):
+        d = real(prefix)
         created.append(d)
         return d
 
-    monkeypatch.setattr(p6, "scratch_dir", recording_scratch)
+    monkeypatch.setattr(tmpdirs, "scratch_dir", recording)
+    return fresh, created
+
+
+def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
+    """A build_refresh_index failure (disk full, killed job) must not
+    leak the freshly-created index dir: it never reaches the fixture
+    store, so neither superseded-eviction nor any later lookup would
+    ever see it — the cleanup has to happen on the failure path itself."""
+    import pytest as _pytest
+
+    import engine.pipeline6 as p6
+
+    fixtures, created = _fresh_fixtures(monkeypatch)
 
     def boom(*a, **k):
         raise RuntimeError("simulated build failure")
@@ -638,40 +646,32 @@ def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
         p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR)
     assert created, "pipeline never allocated an index dir?"
     assert not any(os.path.exists(d) for d in created)
-    assert p6._INDEX_CACHE == {}
+    assert len(fixtures) == 0
 
 
-def test_torn_cache_entry_is_evicted_but_kept_on_disk(spark, monkeypatch, tmp_path):
+def test_torn_cache_entry_is_evicted_but_kept_on_disk(spark, monkeypatch):
     """A cached index dir whose CURRENT pointer vanished (e.g. a /tmp
-    cleaner) must be EVICTED from the cache (or the rebuild overwrites
-    the only reference) but NOT rmtree'd: a manifest returned before the
-    tear may still lazily read the surviving parquet — the same grace the
+    cleaner) must be replaced (or every later refresh reads a torn
+    index) but NOT rmtree'd: a manifest returned before the tear may
+    still lazily read the surviving parquet — the same grace the
     superseded-retention gives. No leak results: cached dirs are always
     scratch_dir allocations, removed by the exit sweep."""
-    import shutil as _shutil
-
     import engine.pipeline6 as p6
     from engine import tmpdirs
 
-    torn = tmp_path / "torn-idx"
-    (torn / "gen-000001").mkdir(parents=True)  # subdir survives, CURRENT gone
-    src = os.path.join(SF_DIR, "documents.parquet")
-    st = os.stat(src)
-    ck = (os.path.realpath(src), st.st_mtime_ns, st.st_size)
-    monkeypatch.setattr(p6, "_INDEX_CACHE", {ck: str(torn)})
-    try:
-        # __wrapped__ bypasses the @query plan memo (see previous test)
-        assert p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR).count() > 0
-        assert torn.exists()  # lazy-plan grace: surviving files untouched
-        new_base = p6._INDEX_CACHE.get(ck)
-        assert new_base is not None and new_base != str(torn)
-        # the rebuilt dir is exit-sweep managed, so nothing leaks past exit
-        assert new_base in tmpdirs._SCRATCH
-    finally:
-        # monkeypatch restores the original cache dict on exit, so the
-        # rebuilt dir would linger until process exit without removal here
-        for d in p6._INDEX_CACHE.values():
-            _shutil.rmtree(d, ignore_errors=True)
+    _, created = _fresh_fixtures(monkeypatch)
+    # __wrapped__ bypasses the @query plan memo (see previous test)
+    p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR)
+    assert len(created) == 1
+    torn = created[0]
+    os.remove(os.path.join(torn, "CURRENT"))  # subdirs survive, CURRENT gone
+    assert p6.pipeline_incremental_refresh.__wrapped__(spark, SF_DIR).count() > 0
+    assert os.path.isdir(torn)  # lazy-plan grace: surviving files untouched
+    assert len(created) == 2
+    new_base = created[1]
+    assert new_base != torn and p6._current_gen(new_base) is not None
+    # the rebuilt dir is exit-sweep managed, so nothing leaks past exit
+    assert new_base in tmpdirs._SCRATCH
 
 
 _LOCK_HOLDER = """

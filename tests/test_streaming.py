@@ -198,16 +198,47 @@ def test_derived_stream_parts_scales_with_source(spark):
     # 2x the session's cores
     import math
 
-    from engine.streaming import _DERIVED_PARTS_CACHE
+    from engine.streaming import _SOURCE_PARTS
 
-    _DERIVED_PARTS_CACHE["fake://huge"] = math.ceil(
-        100 * 100_000 / _STREAM_ROWS_PER_INSTANCE
+    _SOURCE_PARTS.get(
+        ["fake://huge/events.parquet"],
+        lambda: math.ceil(100 * 100_000 / _STREAM_ROWS_PER_INSTANCE),
     )
-    try:
-        got = _derived_stream_parts(spark, "fake://huge")
-        assert got == min(400, 2 * spark.sparkContext.defaultParallelism)
-    finally:
-        _DERIVED_PARTS_CACHE.pop("fake://huge", None)
+    got = _derived_stream_parts(spark, "fake://huge")
+    assert got == min(400, 2 * spark.sparkContext.defaultParallelism)
     # an unreadable source falls back to the r14 constant
-    _DERIVED_PARTS_CACHE.pop("/nonexistent", None)
     assert _derived_stream_parts(spark, "/nonexistent") == 4
+
+
+def test_stream_fixtures_follow_a_rewritten_corpus(spark, tmp_path):
+    """stream_late_data's replay fixture and the derived state-store parts
+    are keyed on the events file version, not on sf_dir: rewriting
+    events.parquet in place must change both answers."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from engine.registry import collect
+    from engine.streaming import _derived_stream_parts
+    from tests.conftest import SF_DIR_MID
+
+    corpus, fresh = tmp_path / "corpus", tmp_path / "fresh"
+    corpus.mkdir()
+    fresh.mkdir()
+    shutil.copy(f"{SF_DIR}/events.parquet", corpus / "events.parquet")
+    fn = collect()[0]["stream_late_data"].__wrapped__
+    rows = lambda d: sorted(map(tuple, fn(spark, str(d)).collect()))
+    before = rows(corpus)
+    assert _derived_stream_parts(spark, str(corpus)) == 2
+
+    # 6 x the sf0.01 events: different rows, and > 2 x 25k source rows
+    mid = pq.read_table(f"{SF_DIR_MID}/events.parquet")
+    pq.write_table(pa.concat_tables([mid] * 6), fresh / "events.parquet")
+    shutil.copy(fresh / "events.parquet", corpus / "events.parquet")
+    after = rows(corpus)
+    assert after != before
+    assert after == rows(fresh)
+    assert _derived_stream_parts(spark, str(corpus)) == min(
+        3, 2 * spark.sparkContext.defaultParallelism
+    )
