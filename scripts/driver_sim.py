@@ -14,6 +14,7 @@ print per-column diffs).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -22,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

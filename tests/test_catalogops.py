@@ -113,11 +113,13 @@ def test_scratch_dirs_removed_at_process_exit():
     by the atexit sweep — previously ~40 bare mkdtemp sites leaked one
     corpus-sized dir per invocation per process (see engine/tmpdirs.py).
     Run a child interpreter so the exit hook actually fires."""
+    import os
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
-        "import os, sys; sys.path.insert(0, '/root/repo')\n"
+        f"import os, sys; sys.path.insert(0, {repo!r})\n"
         "from engine.tmpdirs import scratch_dir\n"
         "d = scratch_dir('sg-scratchtest-')\n"
         "open(os.path.join(d, 'x'), 'w').write('x')\n"
@@ -128,6 +130,4 @@ def test_scratch_dirs_removed_at_process_exit():
     )
     d = out.stdout.strip().splitlines()[-1]
     assert "sg-scratchtest-" in d
-    import os
-
     assert not os.path.exists(d)
