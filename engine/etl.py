@@ -22,7 +22,6 @@ same, only the sink changes.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,8 +29,7 @@ from pyspark.sql.window import Window
 
 from engine.registry import query
 from engine.tables import load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -137,7 +135,7 @@ def etl_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning on the key; the union+window plan here is the engine-agnostic
     fallback and costs exactly one shuffle."""
     e = load(spark, sf_dir, "events")
-    path = f"{_TMP}/spark_graft_upsert_events_{sftag(sf_dir)}"
+    path = scratch_dir("spark_graft_upsert_events_")
     existing = e.filter(F.col("event_id") % 2 == 0).withColumn("batch", F.lit(0))
     existing.write.mode("overwrite").parquet(path)
     new_batch = (

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -233,15 +234,9 @@ def scan_csv_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the write partitions map-side (no shuffle); the read is a
     header-skipping parallel text scan with the pinned schema (no
     inference job). Dialect parsing is per-row, stays in the scan."""
-    import os
-    import tempfile
-
     e = load(spark, sf_dir, "events").filter(F.col("event_id") % 50 == 0)
     src = e.select("event_id", "event_type", "value", "props")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg_csv_dialect_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir("sg_csv_dialect_")
     opts = {
         "sep": "|",
         "quote": "'",

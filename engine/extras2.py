@@ -13,7 +13,6 @@ multimodal pipeline). Registered after the 50-key attestation window.
 
 from __future__ import annotations
 
-import tempfile
 
 from engine.tmpdirs import scratch_dir
 
@@ -325,8 +324,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    state_dir = f"{tempfile.gettempdir()}/sg_fb_upsert_{sftag(sf_dir)}"
-    shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = scratch_dir("sg_fb_upsert_")
     # The three replay files are fixture prep, built once per corpus file
     # version; every run still executes a REAL streaming query: fresh
     # checkpoint, fresh state table, real merges.

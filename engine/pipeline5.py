@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from engine.tmpdirs import scratch_dir
 
@@ -61,8 +60,7 @@ def pipeline_stream_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch's per-batch transactionality caveat (and the
     table-format upgrade path) is documented at
     stream_foreachbatch_upsert."""
-    state_dir = f"{tempfile.gettempdir()}/sg_serving_{sftag(sf_dir)}"
-    shutil.rmtree(state_dir, ignore_errors=True)
+    state_dir = scratch_dir("sg_serving_")
     # The three replay files are fixture prep, built once per corpus file
     # version; every run still executes a real streaming query: fresh
     # checkpoint, fresh serving table, real merges.

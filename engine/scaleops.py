@@ -25,7 +25,6 @@ operative spec).
 
 from __future__ import annotations
 
-import tempfile
 
 from engine.tmpdirs import scratch_dir
 
@@ -34,8 +33,6 @@ from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load, sftag
-
-_TMP = tempfile.gettempdir()
 
 
 @query(

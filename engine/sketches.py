@@ -12,15 +12,13 @@ the 100 TB rollup is O(sketch bytes × partitions), never a re-scan.
 
 from __future__ import annotations
 
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.registry import query
-from engine.tables import load, sftag
-
-_TMP = tempfile.gettempdir()
+from engine.tables import load
+from engine.tmpdirs import scratch_dir
 
 
 @query(
@@ -65,7 +63,7 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_nation = c.groupBy("c_nationkey").agg(
         F.expr("hll_sketch_agg(c_custkey)").alias("sk")
     )
-    path = f"{_TMP}/spark_graft_hll_nation_{sftag(sf_dir)}"
+    path = scratch_dir("spark_graft_hll_nation_")
     per_nation.write.mode("overwrite").parquet(path)
     stored = spark.read.parquet(path)
 

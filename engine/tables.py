@@ -136,14 +136,12 @@ SCHEMAS: dict[str, T.StructType] = {
 
 
 def sftag(sf_dir: str) -> str:
-    """Filesystem/identifier-safe tag derived from sf_dir.
+    """Identifier-safe tag derived from sf_dir, for session-global names.
 
-    Every side-effecting operator (temp CSV/JSON/ORC/parquet sinks, bucketed
-    tables, streaming memory sinks) must scope its name with this tag:
-    registry plan memoization is per-(session, sf_dir), so a FIXED path would
-    let a second scale factor overwrite the bytes a first scale's memoized
-    lazy plan still reads — the stale-scale hazard fixed for bucketed tables
-    in round 1 and generalized in round 2 (ADVICE r01)."""
+    Catalog tables and streaming memory-sink query names are shared by
+    every caller in the session, so each carries this tag: one name for
+    two scale factors would serve one corpus's rows to the other. File
+    outputs need no tag; they go to a fresh ``tmpdirs.scratch_dir``."""
     return "".join(c if c.isalnum() else "_" for c in sf_dir.strip("/"))
 
 
