@@ -72,6 +72,15 @@ def _git_head() -> str:
         return "unknown"
 
 
+def _steal_now() -> tuple[int, int] | None:
+    """(steal, total) jiffies from /proc/stat; None where it is unreadable."""
+    try:
+        f = open("/proc/stat").readline().split()
+        return int(f[8]), sum(int(x) for x in f[1:9])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
 def _load_note() -> dict:
     """Host-contention annotation (VERDICT r04 item 4): the bench host has
     documented co-tenant noise with ±2× swings, so every bench line records
@@ -260,13 +269,6 @@ def main() -> int:
     # After the warm passes so the JVM is hot: the probes are workload-free
     # host-speed constants, not JIT-warmup measurements.
     host_calib = _host_calibration(spark)
-
-    def _steal_now() -> tuple[int, int] | None:
-        try:
-            f = open("/proc/stat").readline().split()
-            return int(f[8]), sum(int(x) for x in f[1:9])
-        except (OSError, IndexError, ValueError):
-            return None
 
     # r14 (VERDICT r13 item 5): interleaved min-of-5. 5 round-robin passes
     # (rotated start so adjacency varies); per query the WARM claim is the
