@@ -13,6 +13,9 @@ import importlib
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
+from engine.cache import Cache
+from engine.tables import TABLES
+
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
@@ -20,6 +23,9 @@ QueryFn = Callable[["SparkSession", str], "DataFrame"]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+# Built plans per (key, corpus file versions), scoped to the application.
+_PLANS = Cache(max_entries=4096)
 
 # Import order of the operator modules; it orders collect()'s keys after
 # the _ATTEST_FIRST head.
@@ -105,23 +111,18 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under SURVEY §2 key ``name`` with optional oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        plan_cache: dict[tuple, "DataFrame"] = {}
-
         def wrapped(spark: "SparkSession", sf_dir: str) -> "DataFrame":
             # The driver harness owns its SparkSession; make sure the
             # runtime confs we rely on (ns-parquet, UTC, AQE) are applied.
             from engine.session import tune
 
             tune(spark)
-            # Memoize the built logical plan per (session, sf_dir): plans are
+            # Memoize the built logical plan per corpus version: plans are
             # lazy and immutable, so a repeat call (bench warm runs, repeated
-            # driver checks) skips Py4J plan construction + re-analysis.
-            ck = (spark, sf_dir)
-            df = plan_cache.get(ck)
-            if df is None:
-                df = fn(spark, sf_dir)
-                plan_cache[ck] = df
-            return df
+            # driver checks) skips Py4J plan construction + re-analysis,
+            # while a rewritten corpus file builds a fresh plan.
+            inputs = [f"{sf_dir}/{t}.parquet" for t in TABLES]
+            return _PLANS.get(inputs, lambda: fn(spark, sf_dir), name, spark=spark)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
