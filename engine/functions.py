@@ -1,31 +1,58 @@
-"""Scalar function surface: SURVEY.md §2.H (strings, regex, edit distance,
-dates, math, JSON, arrays incl. higher-order, maps, casts, conditionals).
+"""Scalar function surface (``fn_`` keys) and the Python UDF/UDTF
+surface (``udf_``, ``udtf_`` keys).
 
-Cross-engine parity rules applied here (SURVEY §5.3 + hard-won additions):
-- per-row IEEE arithmetic (+,-,*,/, sqrt) is emitted RAW — bit-identical in
-  both engines; round() on decimal-aligned data is a half-up/half-away trap.
-- libm-backed fns (ln, pow with non-integer results) may differ by 1 ulp →
-  round(…, 6) on both sides.
-- ceil/floor: Spark returns BIGINT, DuckDB DOUBLE → oracle casts to BIGINT.
-- date outputs are emitted as TIMESTAMP (not DATE) to keep pandas dtypes
-  aligned across engines; weekday uses Spark `weekday` ↔ DuckDB `isodow - 1`.
-- no raw MapType/ArrayType in output: maps → sorted key/value strings,
-  arrays → array_join/array_to_string or scalar summaries.
+The ``fn_`` keys stay inside Catalyst expressions; the UDF keys are the
+only ones here that cross into Python workers.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from engine.registry import query
-from engine.tables import load
+from engine.tables import load, sftag
+
+
+@query(
+    "fn_variant_shred",
+    oracle="""
+    SELECT event_id,
+           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+           (json_extract(props, '$.missing') IS NOT NULL) AS has_missing,
+           CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod
+    FROM events
+    """,
+)
+def fn_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured shredding via VARIANT: parse the props JSON once into
+    Spark's binary VARIANT encoding, then extract typed paths — present key
+    as BIGINT, absent key as a null probe, and arithmetic directly on the
+    extracted value. The VARIANT column itself never reaches the output
+    (binary, engine-specific); only the shredded scalars do.
+
+    100 TB: ingest-once-parse-once. A VARIANT column in parquet stores the
+    binary encoding + shredded subcolumns; path extraction is a pointer
+    walk and never re-tokenizes text, while get_json_object re-parses the
+    whole string per path per row."""
+    e = load(spark, sf_dir, "events")
+    return e.select(
+        "event_id",
+        F.expr("variant_get(parse_json(props), '$.k', 'bigint')").alias("k"),
+        F.expr("variant_get(parse_json(props), '$.missing', 'string') IS NOT NULL").alias(
+            "has_missing"
+        ),
+        (F.expr("variant_get(parse_json(props), '$.k', 'bigint')") % 10).alias("k_mod"),
+    )
 
 
 # fn_array_set_ops sits first in this module for visibility (its last driver
 # verdict was the r02 canonicalizer crash, fixed in-tree by comma-joining
 # arrays) — but WINDOW placement is controlled by name in
 # engine/registry.py's _ATTEST_FIRST, not by registration order.
+
 @query(
     "fn_array_set_ops",
     oracle="""
@@ -576,4 +603,984 @@ def fn_string_split_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("adjective"),
         F.split_part(F.col("p_name"), F.lit(" "), F.lit(2)).alias("noun"),
         F.split_part(F.col("p_name"), F.lit(" "), F.lit(9)).alias("beyond"),
+    )
+
+
+@query(
+    "udf_python_scalar",
+    oracle="""
+    SELECT l_orderkey, l_linenumber,
+           round(l_extendedprice * (1 - l_discount) * (1 + l_tax), 2) AS charged
+    FROM lineitem WHERE l_orderkey < 1000
+    """,
+)
+def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Row-at-a-time Python UDF computing the charged price.
+
+    Deliberately the slow path (one Python call per row, pickled rows) — the
+    pandas_udf twin below is the production shape; this key proves plain UDF
+    registration/execution works."""
+    li = load(spark, sf_dir, "lineitem")
+
+    @F.udf(T.DoubleType())
+    def charged(price: float, disc: float, tax: float) -> float:
+        return price * (1 - disc) * (1 + tax)
+
+    # Round JVM-side: Python round() is half-even, which diverges from
+    # Spark/DuckDB half-up on .xx5 boundaries (SURVEY §5.3 rule 6).
+    return li.filter(F.col("l_orderkey") < 1000).select(
+        "l_orderkey",
+        "l_linenumber",
+        F.round(charged("l_extendedprice", "l_discount", "l_tax"), 2).alias("charged"),
+    )
+
+
+@query(
+    "udf_pandas_vectorized",
+    oracle="""
+    SELECT l_orderkey, l_linenumber,
+           round(l_extendedprice * (1 - l_discount) * (1 + l_tax), 2) AS charged
+    FROM lineitem WHERE l_orderkey < 1000
+    """,
+)
+def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same logic as udf_python_scalar through an Arrow-vectorized pandas_udf:
+    one Python call per ~10k-row Arrow batch, numpy math inside — the 10-100×
+    faster shape (SURVEY §2.K)."""
+    li = load(spark, sf_dir, "lineitem")
+
+    @F.pandas_udf(T.DoubleType())
+    def charged(price: pd.Series, disc: pd.Series, tax: pd.Series) -> pd.Series:
+        return price * (1 - disc) * (1 + tax)
+
+    return li.filter(F.col("l_orderkey") < 1000).select(
+        "l_orderkey",
+        "l_linenumber",
+        F.round(charged("l_extendedprice", "l_discount", "l_tax"), 2).alias("charged"),
+    )
+
+
+@query(
+    "udtf_python",
+    oracle="""
+    SELECT doc_id, unnest(string_split(text, ' ')) AS token,
+           generate_subscripts(string_split(text, ' '), 1) AS pos
+    FROM documents WHERE doc_id < 50
+    """,
+)
+def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Python UDTF (Spark 4): explode each doc into (doc_id, token, pos) rows
+    via a LATERAL table function — the user-defined analogue of explode with
+    ordinality."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="doc_id bigint, token string, pos int")
+    class Tokenize:
+        def eval(self, doc_id: int, text: str):
+            if text is None:  # NULL text: no tokens, like unnest(NULL)
+                return
+            for i, tok in enumerate(text.split(" ")):
+                yield doc_id, tok, i + 1
+
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    d.createOrReplaceTempView("sg_udtf_docs")
+    spark.udtf.register("sg_tokenize", Tokenize)
+    return spark.sql(
+        "SELECT t.doc_id, t.token, t.pos "
+        "FROM sg_udtf_docs, LATERAL sg_tokenize(doc_id, text) t"
+    )
+
+
+@query(
+    "udf_python_arrow_scalar",
+    oracle="""
+    SELECT l_returnflag,
+           round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+    FROM lineitem GROUP BY 1 ORDER BY 1
+    """,
+)
+def udf_python_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-optimized Python scalar UDF (udf(..., useArrow=True), Spark
+    3.5+/4): the third point of the scalar-UDF matrix beside the pickled
+    row-at-a-time udf_python_scalar and the pandas_udf batch variant —
+    same Python lambda, Arrow columnar transport, no pandas Series
+    wrapper. Per-element Python math on IEEE doubles is bit-identical to
+    the JVM expression, so the aggregate hash-matches the pure-SQL oracle.
+
+    100 TB: still the slow path (per-element Python), but Arrow transport
+    removes pickle overhead — the right choice when a scalar UDF is
+    unavoidable and the logic resists vectorization."""
+    disc = F.udf(lambda p, d: p * (1.0 - d), "double", useArrow=True)
+    li = load(spark, sf_dir, "lineitem")
+    return (
+        li.groupBy("l_returnflag")
+        .agg(
+            F.round(
+                F.sum(disc(F.col("l_extendedprice"), F.col("l_discount"))), 2
+            ).alias("revenue")
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+@query(
+    "fn_bitwise",
+    oracle="""
+    SELECT CAST(n_nationkey AS BIGINT)            AS k,
+           CAST(n_nationkey & 5 AS BIGINT)        AS k_and,
+           CAST(n_nationkey | 9 AS BIGINT)        AS k_or,
+           CAST(xor(n_nationkey, 12) AS BIGINT)   AS k_xor,
+           CAST(n_nationkey << 3 AS BIGINT)       AS k_shl,
+           CAST(n_nationkey >> 1 AS BIGINT)       AS k_shr,
+           CAST(bit_count(CAST(n_nationkey AS BIGINT)) AS BIGINT) AS k_bits
+    FROM nation
+    """,
+)
+def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bitwise operator surface: AND/OR/XOR, shifts, popcount — used by the
+    hash/bucketing idioms elsewhere (LSH band packing, salting). Pure
+    narrow projection, whole-stage codegen, zero shuffle."""
+    n = load(spark, sf_dir, "nation")
+    k = F.col("n_nationkey")
+    return n.select(
+        k.cast("long").alias("k"),
+        F.expr("n_nationkey & 5").cast("long").alias("k_and"),
+        F.expr("n_nationkey | 9").cast("long").alias("k_or"),
+        F.expr("n_nationkey ^ 12").cast("long").alias("k_xor"),
+        F.shiftleft(k, 3).cast("long").alias("k_shl"),
+        F.shiftright(k, 1).cast("long").alias("k_shr"),
+        F.bit_count(k.cast("long")).cast("long").alias("k_bits"),
+    )
+
+
+@query(
+    "fn_url_parse",
+    oracle="""
+    SELECT doc_id, url,
+           regexp_extract(url, '^https?://([^/?#]+)', 1) AS host,
+           regexp_extract(url, '^https?://[^/?#]+([^?#]*)', 1) AS path,
+           regexp_extract(url, '[?&]lang=([^&#]*)', 1) AS lang_param
+    FROM (
+      SELECT doc_id,
+             'https://' || source || '.example.com/docs/' || CAST(doc_id AS VARCHAR)
+               || '?lang=' || lang || '&n=' || CAST(n_chars AS VARCHAR) AS url
+      FROM documents
+    ) ORDER BY doc_id
+    """,
+)
+def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL component extraction with the native parse_url expression (HOST /
+    PATH / QUERY:key) over URLs derived from corpus columns — the dedup-by-
+    canonical-URL and domain-mix-analysis primitive of web-scale corpus
+    curation. The oracle re-derives the same components with regexes
+    (DuckDB has no parse_url), pinning Spark's parser to the RFC behavior
+    for this URL shape.
+
+    100 TB: parse_url is a codegen'd JVM expression — per-row string work
+    with zero shuffle; domain-level rollups then hash on the extracted
+    host."""
+    d = load(spark, sf_dir, "documents")
+    url = F.concat(
+        F.lit("https://"),
+        F.col("source"),
+        F.lit(".example.com/docs/"),
+        F.col("doc_id").cast("string"),
+        F.lit("?lang="),
+        F.col("lang"),
+        F.lit("&n="),
+        F.col("n_chars").cast("string"),
+    )
+    return d.select(
+        "doc_id",
+        url.alias("url"),
+        F.parse_url(url, F.lit("HOST")).alias("host"),
+        F.parse_url(url, F.lit("PATH")).alias("path"),
+        F.parse_url(url, F.lit("QUERY"), F.lit("lang")).alias("lang_param"),
+    ).orderBy("doc_id")
+
+
+@query(
+    "fn_collation_group",
+    oracle="""
+    SELECT lower(mixed) AS type_key, count(*) AS n,
+           count(DISTINCT mixed) AS n_case_variants
+    FROM (
+      SELECT CASE WHEN p_partkey % 2 = 0 THEN lower(p_type) ELSE p_type END AS mixed
+      FROM part
+    ) GROUP BY lower(mixed) ORDER BY type_key
+    """,
+)
+def fn_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UTF8_LCASE collation (Spark 4): GROUP BY a case-insensitively
+    collated column — the collation is a property of the TYPE, so grouping,
+    equality, and DISTINCT all become case-insensitive without wrapping
+    every expression in lower(). The corpus column is single-case
+    (uppercase), so a deterministic case-mangle (lower() on even part
+    keys) creates real variants; the output key is lower()-normalized
+    because which variant
+    represents a collated group is engine-internal. n_case_variants counts
+    the raw (case-sensitive) variants inside each collated group — 2 when
+    both cases occur, proving the group genuinely merged across case.
+
+    100 TB: collated grouping hashes the collation key directly (one pass,
+    map-side combine) — same plan as any hash aggregate; contrast with
+    lower()-wrapping, which is equivalent here but loses index/stats
+    alignment on engines that track collation natively."""
+    p = load(spark, sf_dir, "part")
+    mixed = F.when(F.col("p_partkey") % 2 == 0, F.lower("p_type")).otherwise(
+        F.col("p_type")
+    )
+    d = p.select(
+        mixed.alias("mixed"),
+        F.expr(
+            "CASE WHEN p_partkey % 2 = 0 THEN lower(p_type) ELSE p_type END"
+            " COLLATE UTF8_LCASE"
+        ).alias("ck"),
+    )
+    return (
+        d.groupBy("ck")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("mixed").alias("n_case_variants"),
+        )
+        .select(
+            F.lower(F.col("ck").cast("string")).alias("type_key"),
+            "n",
+            "n_case_variants",
+        )
+        .orderBy("type_key")
+    )
+
+
+@query(
+    "udtf_arrow_expand",
+    oracle="""
+    SELECT o_orderkey, CAST(d AS INT) AS day_offset,
+           o_orderdate + to_days(CAST(d AS INT)) AS followup_date
+    FROM orders, UNNEST(range(0, 3)) AS t(d)
+    WHERE o_orderpriority = '1-URGENT' AND o_orderdate >= TIMESTAMP '1998-01-01'
+    ORDER BY o_orderkey, day_offset
+    """,
+)
+def udtf_arrow_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-optimized Python UDTF (Spark 4 ``useArrow=True``): expand each
+    urgent order into a 3-day follow-up schedule via a LATERAL table
+    function. Same API as udtf_python but the UDTF I/O crosses the Python
+    boundary as Arrow batches instead of pickled rows — the UDTF analogue
+    of the scan_python_datasource Arrow-reader fix (~10× on wide
+    expansions).
+
+    100 TB: the expansion factor (3×) happens INSIDE the Python worker per
+    batch; only the already-filtered urgent rows reach Python (predicate
+    stays JVM-side). The filtered input goes through spread_cpu
+    (engine/textops.py:43) before the lateral join: per-row Python eval
+    is the slow stage, and the selective filter collapses the small scan
+    to one partition (sf0.1: 16k rows → 1 partition → one serial Python
+    worker, ~4 s; spread across the session's cores the same eval runs
+    ~0.6 s). The shuffle moves only the filtered keys — noise next to
+    the eval it parallelizes — and spread_cpu's under-parallel gate
+    makes it a no-op on a cluster scan that already has real splits."""
+    import datetime as dt
+
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="o_orderkey bigint, day_offset int, followup_date timestamp_ntz", useArrow=True)
+    class Followups:
+        def eval(self, o_orderkey: int, o_orderdate: dt.datetime):
+            for d in range(3):
+                yield o_orderkey, d, o_orderdate + dt.timedelta(days=d)
+
+    tag = sftag(sf_dir)
+    # 1998 slice: the key demonstrates the Arrow UDTF path, and per-row
+    # eval() in Python dominates regardless of Arrow I/O — bound the input
+    # so the 184-key sweep doesn't pay ~6 s for an API demo.
+    from engine.vectors import spread_cpu
+
+    spread_cpu(
+        load(spark, sf_dir, "orders").filter(
+            (F.col("o_orderpriority") == "1-URGENT")
+            & (F.col("o_orderdate") >= "1998-01-01")
+        )
+    ).createOrReplaceTempView(f"sg_urgent_{tag}")
+    spark.udtf.register("sg_followups", Followups)
+    return spark.sql(
+        f"""
+        SELECT t.o_orderkey, t.day_offset, t.followup_date
+        FROM sg_urgent_{tag}, LATERAL sg_followups(o_orderkey, o_orderdate) t
+        ORDER BY t.o_orderkey, t.day_offset
+        """
+    )
+
+
+@query(
+    "fn_xml_extract",
+    oracle="""
+    SELECT n_nationkey,
+           xml,
+           regexp_extract(xml, '<name>([^<]*)</name>', 1) AS name_back,
+           CAST(regexp_extract(xml, '<region id="(\\d+)"', 1) AS BIGINT) AS region_back,
+           (regexp_extract(xml, '<name>([^<]*)</name>', 1) = n_name) AS roundtrip_ok
+    FROM (
+      SELECT n_nationkey, n_name,
+             '<nation key="' || CAST(n_nationkey AS VARCHAR) || '"><name>' || n_name
+               || '</name><region id="' || CAST(n_regionkey AS VARCHAR)
+               || '"/></nation>' AS xml
+      FROM nation
+    ) ORDER BY n_nationkey
+    """,
+)
+def fn_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XML path extraction with the native xpath_* expression family over
+    deterministically synthesized XML (corpus-derived — we never invent
+    external inputs): xpath_string pulls a child element's text,
+    xpath_long an attribute, and the round-trip flag proves
+    serialize→extract is lossless for this shape. Completes the
+    semi-structured trio: JSON (fn_json_extract), VARIANT
+    (fn_variant_shred), XML here — the legacy-feed format every
+    long-lived warehouse still ingests.
+
+    100 TB: xpath_* are JVM expressions (VTD-style parse per row, no
+    Python); for repeated multi-path extraction convert once to VARIANT
+    or a struct instead of re-parsing per path — same ingest-once rule as
+    fn_variant_shred."""
+    n = load(spark, sf_dir, "nation")
+    xml = F.concat(
+        F.lit('<nation key="'),
+        F.col("n_nationkey").cast("string"),
+        F.lit('"><name>'),
+        F.col("n_name"),
+        F.lit('</name><region id="'),
+        F.col("n_regionkey").cast("string"),
+        F.lit('"/></nation>'),
+    )
+    d = n.select("n_nationkey", "n_name", xml.alias("xml"))
+    return d.select(
+        "n_nationkey",
+        "xml",
+        F.expr("xpath_string(xml, '/nation/name')").alias("name_back"),
+        F.expr("xpath_long(xml, '/nation/region/@id')").alias("region_back"),
+        (F.expr("xpath_string(xml, '/nation/name')") == F.col("n_name")).alias(
+            "roundtrip_ok"
+        ),
+    ).orderBy("n_nationkey")
+
+
+@query(
+    "fn_explode_outer_structs",
+    oracle="""
+    WITH t AS (
+      SELECT l_orderkey, l_linenumber,
+             CAST(l_linenumber % 3 AS INT) AS alen, l_quantity
+      FROM lineitem WHERE l_orderkey < 2000
+    )
+    SELECT t.l_orderkey, t.l_linenumber,
+           CAST(u.pos - 1 AS INT) AS pos,
+           CAST(u.idx AS INT) AS idx,
+           u.val
+    FROM t LEFT JOIN LATERAL (
+      SELECT i AS idx, i * t.l_quantity AS val,
+             row_number() OVER () AS pos
+      FROM UNNEST(range(1, t.alen + 1)) AS g(i)
+    ) u ON true
+    ORDER BY l_orderkey, l_linenumber, pos
+    """,
+)
+def fn_explode_outer_structs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Generator with OUTER semantics: posexplode_outer over a derived
+    array<struct> whose length is l_linenumber % 3 — one third of the rows
+    get an EMPTY array, and the _outer variant keeps those parent rows
+    with null (pos, idx, val) where plain posexplode would silently drop
+    them. That drop is the classic lateral-expansion data-loss bug; the
+    oracle mirrors with LEFT JOIN LATERAL UNNEST.
+
+    100 TB: generators are map-local (no shuffle); the row-count multiplier
+    is the array length — bound it (slice) before exploding unbounded
+    payloads, and prefer *_outer whenever the parent row must survive for
+    downstream accounting."""
+    li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
+    # slice(array(1,2), 1, alen), NOT sequence(1, alen): Spark's sequence
+    # infers step -1 when start > stop, so sequence(1, 0) is [1, 0] — a
+    # 2-element array where the empty array was intended.
+    arr = F.transform(
+        F.slice(F.array(F.lit(1), F.lit(2)), 1, F.col("l_linenumber") % 3),
+        lambda i: F.struct(
+            i.cast("int").alias("idx"),
+            (i * F.col("l_quantity")).alias("val"),
+        ),
+    )
+    d = li.select("l_orderkey", "l_linenumber", arr.alias("a"))
+    return (
+        d.select(
+            "l_orderkey",
+            "l_linenumber",
+            F.posexplode_outer("a").alias("pos", "s"),
+        )
+        .select(
+            "l_orderkey",
+            "l_linenumber",
+            "pos",
+            F.col("s.idx").alias("idx"),
+            F.col("s.val").alias("val"),
+        )
+        .orderBy("l_orderkey", "l_linenumber", "pos")
+    )
+
+
+@query(
+    "fn_mask_pii",
+    oracle="""
+    SELECT c_custkey,
+           regexp_replace(regexp_replace(regexp_replace(
+             c_name, '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', 'n', 'g')
+             AS name_masked,
+           regexp_replace(
+             printf('%03d-%07d', c_nationkey, (c_custkey * 7919) % 10000000),
+             '[0-9]', 'n', 'g') AS phone_masked,
+           length(c_name) AS name_len
+    FROM customer ORDER BY c_custkey
+    """,
+)
+def fn_mask_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Format-preserving PII redaction with the native mask() expression:
+    uppercase→X, lowercase→x, digits→n, punctuation/spacing preserved — so
+    masked exports keep their shape (lengths, separators) for debugging
+    and joins-on-format while carrying zero identifying content. The
+    oracle mirrors with regexp_replace chains, pinning mask()'s default
+    character classes.
+
+    100 TB: mask() is a codegen'd per-row expression (zero shuffle) —
+    apply it AT EXPORT in the select list of the sink query, never by
+    rewriting stored data; pair with fn_aes_roundtrip for the
+    at-rest-reversible variant."""
+    c = load(spark, sf_dir, "customer")
+    # the corpus customer table has no phone column — derive a stable
+    # phone-SHAPED string from the keys so the masked output keeps the
+    # digit/dash format a real phone field would have
+    phone = F.format_string(
+        "%03d-%07d", F.col("c_nationkey"), (F.col("c_custkey") * 7919) % 10000000
+    )
+    return (
+        c.withColumn("phone_src", phone)
+        .select(
+            "c_custkey",
+            F.expr("mask(c_name)").alias("name_masked"),
+            F.expr("mask(phone_src)").alias("phone_masked"),
+            F.length("c_name").alias("name_len"),
+        )
+        .orderBy("c_custkey")
+    )
+
+
+@query(
+    "fn_aes_roundtrip",
+    # Self-validating FULL: the ciphertext is AES output (no DuckDB twin),
+    # but the round-trip plaintext IS the source column, the PKCS7 padded
+    # length is pure arithmetic, and the verified flag is deterministic.
+    oracle="""
+    SELECT c_custkey,
+           c_name AS name_roundtrip,
+           CAST((octet_length(encode(c_name)) // 16 + 1) * 16 AS INT) AS cipher_len,
+           TRUE AS roundtrip_ok
+    FROM customer ORDER BY c_custkey
+    """,
+)
+def fn_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column-level encryption: aes_encrypt the customer name (AES-128-ECB
+    — deterministic, unlike the default GCM whose random IV would make
+    every run differ; real deployments pick GCM + stored IVs) and verify
+    try_aes_decrypt restores the exact plaintext. Output: the round-
+    tripped name (oracle = the source column), the PKCS7 ciphertext
+    length ((len/16 + 1)·16 — pure arithmetic), and the verified flag.
+
+    100 TB: both directions are codegen'd JVM expressions — encrypt at
+    ingest in the write path's select list, grant decrypt by key
+    distribution, keep the key OUT of the data plane (here a fixture
+    constant; production uses a KMS-resolved session conf)."""
+    key = "sg-fixture-key16"  # exactly 16 bytes → AES-128; fixture, not a secret
+    c = load(spark, sf_dir, "customer")
+    enc = F.expr(f"aes_encrypt(c_name, '{key}', 'ECB')")
+    dec = F.expr(
+        f"cast(try_aes_decrypt(aes_encrypt(c_name, '{key}', 'ECB'), '{key}', 'ECB')"
+        " as string)"
+    )
+    return c.select(
+        "c_custkey",
+        dec.alias("name_roundtrip"),
+        F.octet_length(enc).cast("int").alias("cipher_len"),
+        (dec == F.col("c_name")).alias("roundtrip_ok"),
+    ).orderBy("c_custkey")
+
+
+@query(
+    "fn_binary_base64",
+    oracle="""
+    SELECT doc_id,
+           to_base64(encode(substr(text, 1, 24))) AS b64,
+           hex(encode(substr(text, 1, 24))) AS hx,
+           CAST(octet_length(encode(substr(text, 1, 24))) AS INT) AS nbytes,
+           (decode(from_base64(to_base64(encode(substr(text, 1, 24)))))
+              = substr(text, 1, 24)) AS b64_roundtrip
+    FROM documents
+    WHERE doc_id % 7 = 0
+    """,
+)
+def fn_binary_base64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary codec surface: base64 / hex encode of a text prefix's UTF-8
+    bytes plus an unbase64 roundtrip proof and the byte length. The
+    encode-for-transport functions every export pipeline leans on.
+
+    Plan: row-local codegen expressions over a pruned 2-column scan with
+    the modulo filter pushed to the reader — zero shuffles."""
+    d = load(spark, sf_dir, "documents")
+    prefix = F.substring("text", 1, 24)
+    pbin = prefix.cast("binary")
+    return d.filter(F.col("doc_id") % 7 == 0).select(
+        "doc_id",
+        F.base64(pbin).alias("b64"),
+        F.hex(pbin).alias("hx"),
+        F.octet_length(prefix).cast("int").alias("nbytes"),
+        (F.unbase64(F.base64(pbin)).cast("string") == prefix).alias(
+            "b64_roundtrip"
+        ),
+    )
+
+
+@query(
+    "fn_regexp_extract_all",
+    oracle="""
+    SELECT doc_id,
+           coalesce(array_to_string(regexp_extract_all(text, 'b[a-z]+')[1:5],
+                                    ','), '') AS first5,
+           CAST(len(regexp_extract_all(text, 'b[a-z]+')) AS INT) AS n_matches
+    FROM documents
+    WHERE doc_id % 5 = 0
+    """,
+)
+def fn_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """regexp_extract_all: every match of a pattern per document (not just
+    the first — that's fn_string_regex's job), with the first five joined
+    for a scalar compare plus the total match count.
+
+    Plan: row-local regex inside codegen over a pruned two-column scan
+    with the modulo filter pushed down; zero shuffles. The [a-z]+ class
+    behaves identically in Java and RE2-style engines — no
+    locale-dependent classes (\\w, \\b) are used, per §5.3."""
+    d = load(spark, sf_dir, "documents")
+    matches = F.regexp_extract_all("text", F.lit("b[a-z]+"), 0)
+    # coalesce mirrors the oracle's: a NULL text has a NULL match list,
+    # and first5 renders as '' on both engines (r12 NULL-text parity)
+    return d.filter(F.col("doc_id") % 5 == 0).select(
+        "doc_id",
+        F.coalesce(F.array_join(F.slice(matches, 1, 5), ","), F.lit("")).alias(
+            "first5"
+        ),
+        F.size(matches).cast("int").alias("n_matches"),
+    )
+
+
+@query(
+    "udtf_table_argument",
+    oracle="""
+    SELECT user_id, count(*) AS n_events,
+           round(sum(value), 4) AS total_value
+    FROM events WHERE user_id < 40
+    GROUP BY user_id
+    """,
+)
+def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Python UDTF consuming a TABLE argument with PARTITION BY — the
+    Spark 4 polymorphic-table-function surface: each user's rows stream
+    into one UDTF instance (eval per row, terminate per partition), so
+    arbitrary per-group Python logic runs without applyInPandas. Here the
+    per-partition logic is a count+sum so the oracle is a plain grouped
+    aggregate — the value is exercising the calling convention, not the
+    arithmetic.
+
+    Plan: PARTITION BY shuffles once on user_id, then the UDTF runs
+    inside the Python worker per partition-group with O(1) state (two
+    accumulators). The float sum accumulates in partition-stream order —
+    a FIXED order per group (Spark sorts table-arg partitions) — and is
+    rounded to 4 anyway. At 100 TB this is the escape hatch for logic
+    SQL can't express, at Python-worker throughput (use it for control
+    flow, not bulk math)."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="user_id bigint, n_events bigint, total_value double")
+    class PerUserSummary:
+        def __init__(self):
+            self._key = None
+            self._n = 0
+            self._sum = 0.0
+
+        def eval(self, row):
+            self._key = row["user_id"]
+            self._n += 1
+            self._sum += row["value"]
+
+        def terminate(self):
+            if self._key is not None:
+                yield self._key, self._n, round(self._sum, 4)
+
+    load(spark, sf_dir, "events").filter(
+        F.col("user_id") < 40
+    ).createOrReplaceTempView("events_udtf_src")
+    spark.udtf.register("sg_per_user_summary", PerUserSummary)
+    return spark.sql(
+        """
+        SELECT * FROM sg_per_user_summary(
+          TABLE(SELECT user_id, value FROM events_udtf_src)
+          PARTITION BY user_id
+        )
+        """
+    )
+
+
+@query(
+    "udf_mapinpandas_stream",
+    oracle="""
+    SELECT doc_id,
+           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+           CAST(length(text) AS BIGINT) AS n_chars_measured
+    FROM documents
+    """,
+)
+def udf_mapinpandas_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mapInPandas iterator contract: the transform receives an ITERATOR
+    of Arrow batches and yields an iterator back — results must be
+    invariant to batch boundaries (asserted in tests by forcing 1-row
+    batches). The per-row work here (token/char counts) is deliberately
+    SQL-expressible so the oracle pins exactness; real uses are the
+    decode/tokenize hooks where Python is unavoidable.
+
+    Plan: zero shuffle — a map-partitions over the scan with Arrow
+    transfer both ways; memory is bounded by
+    spark.sql.execution.arrow.maxRecordsPerBatch regardless of partition
+    size (the reason the iterator form exists)."""
+    import pandas as pd
+
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def counts(batches):
+        for pdf in batches:
+            # .str accessors NULL-propagate (NaN), matching the oracle's
+            # len(string_split(NULL)) = NULL; nullable Int64 keeps the
+            # Arrow bigint schema (r12 NULL-text hardening)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "n_tok": pdf["text"].str.split(" ").str.len().astype("Int64"),
+                    "n_chars_measured": pdf["text"].str.len().astype("Int64"),
+                }
+            )
+
+    return d.mapInPandas(
+        counts, schema="doc_id bigint, n_tok bigint, n_chars_measured bigint"
+    )
+
+
+@query(
+    "fn_unix_epoch",
+    oracle="""
+    SELECT o_orderkey,
+           CAST(epoch(o_orderdate) AS BIGINT) AS epoch_s,
+           CAST(epoch_ms(o_orderdate) AS BIGINT) AS epoch_ms,
+           strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS rendered,
+           CAST(epoch(o_orderdate) - epoch(TIMESTAMP '1995-01-01')
+                AS BIGINT) // 86400 AS days_since_95
+    FROM orders WHERE o_orderkey % 30 = 0
+    """,
+)
+def fn_unix_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Epoch conversions: seconds and milliseconds since the Unix epoch,
+    a formatted render, and day arithmetic on the epoch numbers — the
+    serialization surface every event pipeline crosses. Valid because the
+    corpus is timezone-naive and the session timezone is pinned UTC
+    (engine.session.tune), so 'wall time' and 'epoch time' agree in both
+    engines.
+
+    Plan: row-local codegen over a pruned scan, modulo filter pushed,
+    zero shuffle. Integer arithmetic end-to-end."""
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 30 == 0)
+    ts = F.col("o_orderdate").cast("timestamp")
+    return o.select(
+        "o_orderkey",
+        F.unix_timestamp(ts).alias("epoch_s"),
+        (F.unix_timestamp(ts) * 1000).alias("epoch_ms"),
+        F.date_format(ts, "yyyy-MM-dd HH:mm:ss").alias("rendered"),
+        (
+            (
+                F.unix_timestamp(ts)
+                - F.unix_timestamp(F.lit("1995-01-01").cast("timestamp"))
+            )
+            / 86400
+        )
+        .cast("bigint")
+        .alias("days_since_95"),
+    )
+
+
+@query(
+    "fn_to_char_number",
+    oracle="""
+    SELECT o_orderkey,
+           printf('%010.2f', round(o_totalprice, 2)) AS padded,
+           round(o_totalprice, 2) AS parsed_back,
+           TRUE AS roundtrip_ok
+    FROM orders
+    """,
+)
+def fn_to_char_number(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Numeric formatting round-trip: to_char renders each (positive)
+    order total against a zero-padded '0000000.00' template and to_number
+    parses the string back; the emitted flag proves parse(format(x)) == x
+    row-for-row. The input is pre-rounded to 2 decimals so both engines
+    format the identical double (to_char's template rounding mode never
+    engages — SURVEY §5.3 rule: round before, not inside, an
+    engine-specific function).
+
+    Oracle maps the template to printf('%010.2f') — zero-fill to width 10
+    with 2 decimals is the same contract. Plan note: pure row-local
+    codegen, zero shuffles; at 100 TB this is the formatting leg of any
+    fixed-width export sink."""
+    o = load(spark, sf_dir, "orders")
+    rounded = F.round(F.col("o_totalprice"), 2)
+    padded = F.to_char(rounded, F.lit("0000000.00"))
+    return o.select(
+        "o_orderkey",
+        padded.alias("padded"),
+        F.to_number(padded, F.lit("0000000.00")).cast("double").alias("parsed_back"),
+        (F.to_number(padded, F.lit("0000000.00")).cast("double") == rounded).alias(
+            "roundtrip_ok"
+        ),
+    )
+
+
+_ZBITS = 8  # 8 bits per dimension -> 16-bit z codes over a 256x256 grid
+
+
+def _interleave_sql(x: str, y: str) -> str:
+    """SQL expression interleaving the low _ZBITS bits of x (even
+    positions) and y (odd positions) — plain shifts/masks/adds."""
+    parts = []
+    for b in range(_ZBITS):
+        parts.append(f"((({x} >> {b}) & 1) << {2 * b})")
+        parts.append(f"((({y} >> {b}) & 1) << {2 * b + 1})")
+    return " + ".join(parts)
+
+
+@query(
+    "fn_zorder_encode",
+    oracle=f"""
+    WITH pts AS (
+      SELECT o_orderkey,
+             CAST(o_custkey % 256 AS BIGINT) AS gx,
+             CAST((o_orderkey // 7) % 256 AS BIGINT) AS gy
+      FROM orders
+    )
+    SELECT o_orderkey, gx, gy,
+           CAST({_interleave_sql("gx", "gy")} AS BIGINT) AS z
+    FROM pts
+    """,
+)
+def fn_zorder_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order (Morton) curve encoding: each order's 2-D grid cell
+    (customer bucket × synthetic second dimension, 256×256) is mapped to
+    a single integer by interleaving the coordinate bits — the curve
+    that makes ONE sort cluster BOTH dimensions. Locality (unit-tested):
+    points close in z are close in (gx, gy), so a z-sorted file's
+    row-group min/max stats prune 2-D range predicates that a
+    lexicographic (gx, gy) sort can only prune on gx.
+
+    Plan note: pure shift/mask codegen, zero shuffles for the encode;
+    the payoff step (sort-by-z before writing, as sink_sorted_clustered
+    does for 1-D) turns 2-D range scans into row-group skipping. 100 TB:
+    this is the standard multi-dimensional clustering layout (Delta
+    OPTIMIZE ZORDER, Iceberg sort orders) expressed as plain integer
+    arithmetic + one global sort at write time."""
+    o = load(spark, sf_dir, "orders")
+    pts = o.select(
+        "o_orderkey",
+        (F.col("o_custkey") % 256).cast("long").alias("gx"),
+        ((F.col("o_orderkey") / 7).cast("long") % 256).cast("long").alias("gy"),
+    )
+    return pts.withColumn("z", F.expr(_interleave_sql("gx", "gy")).cast("long"))
+
+
+@query(
+    "fn_timestamp_multiformat_parse",
+    oracle="""
+    WITH raw AS (
+      SELECT event_id, ts,
+             CASE event_id % 3
+               WHEN 0 THEN strftime(ts, '%Y-%m-%d %H:%M:%S')
+               WHEN 1 THEN strftime(ts, '%d/%m/%Y %H:%M:%S')
+               ELSE strftime(ts, '%Y-%m-%dT%H:%M:%S')
+             END AS raw_str
+      FROM events
+    ),
+    parsed AS (
+      SELECT event_id, ts, raw_str,
+             coalesce(
+               try_strptime(raw_str, '%Y-%m-%d %H:%M:%S'),
+               try_strptime(raw_str, '%d/%m/%Y %H:%M:%S'),
+               try_strptime(raw_str, '%Y-%m-%dT%H:%M:%S')
+             ) AS parsed_ts
+      FROM raw
+    )
+    SELECT CAST(event_id % 3 AS INT) AS fmt,
+           count(*) AS n,
+           CAST(count(parsed_ts) AS BIGINT) AS n_parsed,
+           CAST(count(CASE WHEN parsed_ts = date_trunc('second', ts)
+                      THEN 1 END) AS BIGINT) AS n_exact
+    FROM parsed GROUP BY 1
+    """,
+)
+def fn_timestamp_multiformat_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The multi-format timestamp cascade: one feed, three date dialects
+    (ISO space-separated, European d/m/Y, ISO 'T') — each row rendered
+    in the dialect its id selects, then parsed back through a
+    coalesce(try_to_timestamp...) chain that tries formats in order and
+    yields NULL only if none match. The audit proves every row parses
+    and round-trips to its (second-truncated) source timestamp, per
+    dialect.
+
+    try_to_timestamp, not to_timestamp: under ANSI mode a parse failure
+    in to_timestamp kills the JOB; the try_ cascade turns it into a
+    quarantine-able NULL (same posture as scan_json_corrupt_permissive).
+    Plan: row-local format/parse codegen, zero shuffles before the final
+    3-row aggregate. 100 TB: format sniffing per-ROW (not per-file) is
+    what survives feeds that mix dialects within one file."""
+    e = load(spark, sf_dir, "events").select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts")
+    )
+    raw = e.withColumn(
+        "raw_str",
+        F.when(
+            F.col("event_id") % 3 == 0, F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
+        )
+        .when(F.col("event_id") % 3 == 1, F.date_format("ts", "dd/MM/yyyy HH:mm:ss"))
+        .otherwise(F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")),
+    )
+    parsed = raw.withColumn(
+        "parsed_ts",
+        F.coalesce(
+            F.try_to_timestamp(F.col("raw_str"), F.lit("yyyy-MM-dd HH:mm:ss")),
+            F.try_to_timestamp(F.col("raw_str"), F.lit("dd/MM/yyyy HH:mm:ss")),
+            F.try_to_timestamp(F.col("raw_str"), F.lit("yyyy-MM-dd'T'HH:mm:ss")),
+        ),
+    )
+    return parsed.groupBy((F.col("event_id") % 3).cast("int").alias("fmt")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("parsed_ts").cast("long").alias("n_parsed"),
+        F.sum(
+            F.when(
+                F.col("parsed_ts") == F.date_trunc("second", "ts"), 1
+            ).otherwise(0)
+        )
+        .cast("long")
+        .alias("n_exact"),
+    )
+
+
+@query(
+    "fn_round_half_even",
+    oracle="""
+    WITH ties AS (
+      SELECT o_orderkey, (o_orderkey % 10) + 0.5 AS v
+      FROM orders WHERE o_orderkey <= 200
+    )
+    SELECT o_orderkey, v,
+           CAST(round(v, 0) AS DOUBLE) AS half_up,
+           CAST(round_even(v, 0) AS DOUBLE) AS half_even,
+           (CAST(round(v, 0) AS DOUBLE) != CAST(round_even(v, 0) AS DOUBLE))
+             AS modes_differ
+    FROM ties
+    """,
+)
+def fn_round_half_even(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rounding-mode semantics on EXACT ties: values k + 0.5 (dyadic —
+    representable, so the tie is real, not float noise) rounded under
+    both contracts side by side: round() = HALF_UP (away from zero:
+    2.5→3) vs bround() = HALF_EVEN (banker's: 2.5→2, 3.5→4). The
+    modes_differ flag marks exactly the rows where the ambient mode
+    changes the answer — even k, where HALF_EVEN rounds down.
+
+    Engine alignment (the point of the key): Spark round ↔ DuckDB round
+    (both away-from-zero on .5), Spark bround ↔ DuckDB round_even.
+    Financial aggregation at 100 TB standardizes on HALF_EVEN precisely
+    because HALF_UP biases sums upward by ~0.5 per tie — across billions
+    of rows that bias is material (§5.3 rule 6's formal sibling)."""
+    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 200)
+    v = (F.col("o_orderkey") % 10) + 0.5
+    return o.select(
+        "o_orderkey",
+        v.alias("v"),
+        F.round(v, 0).cast("double").alias("half_up"),
+        F.bround(v, 0).cast("double").alias("half_even"),
+        (F.round(v, 0).cast("double") != F.bround(v, 0).cast("double")).alias(
+            "modes_differ"
+        ),
+    )
+
+
+@query(
+    "fn_ulid_sortable_id",
+    oracle="""
+    SELECT event_id,
+           printf('%016x', xor(epoch_us(ts), (-9223372036854775808)::BIGINT))
+             || '-'
+             || substring(md5('evt|' || CAST(event_id AS VARCHAR)), 1, 8)
+             AS sid,
+           TRUE AS sid_unique
+    FROM events
+    """,
+)
+def fn_ulid_sortable_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ULID-style sortable ids: 16 hex digits of SIGN-BIT-FLIPPED
+    epoch-microseconds (the standard order-preserving int64 key encoding
+    — HBase/Bigtable row keys do exactly this) joined to an 8-hex md5
+    suffix of the typed business key (uniqueness without any sequence
+    coordination). Sorting a table by this id clusters it by creation
+    time — the property that makes time-range scans prune and appends
+    land in fresh partitions, and that random UUIDs destroy.
+
+    r14 adversarial-timestamp axis: the previous 14-digit zero-pad
+    overflowed at year ~4253 (56 bits of µs) and Spark's lpad silently
+    TRUNCATED the overflow (corrupting both order and uniqueness), while
+    pre-1970 stamps rendered as 16-digit two's-complement that sorted
+    AFTER every positive epoch. XOR with the sign bit maps the full
+    int64 µs range onto an unsigned 16-digit space where lexicographic
+    order is exactly time order — 1969 < epoch < 2024 < 9999 all sort
+    correctly (pinned).
+
+    Plan: pure row-local rendering, zero shuffles; the uniqueness flag
+    is pinned exact by the unit test (prefix collisions are resolved by
+    the suffix). 100 TB: id generation that needs NO coordination point
+    is a scale requirement, not a style choice — sequences serialize,
+    monotonically_increasing_id depends on partition layout; timestamp
+    + content hash depends on nothing."""
+    e = load(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    # hex() renders the xored value as unsigned 64-bit; the top nibble is
+    # always 7 or 8 for any in-range timestamp, so the width is a
+    # constant 16 — the lpad is belt-and-braces, never a truncation.
+    prefix = F.lower(
+        F.lpad(
+            F.hex(
+                F.unix_micros(F.col("ts")).bitwiseXOR(
+                    F.lit(-9223372036854775808)
+                )
+            ),
+            16,
+            "0",
+        )
+    )
+    suffix = F.substring(
+        F.md5(F.concat(F.lit("evt|"), F.col("event_id").cast("string"))), 1, 8
+    )
+    return e.select(
+        "event_id",
+        F.concat(prefix, F.lit("-"), suffix).alias("sid"),
+        F.lit(True).alias("sid_unique"),
     )

@@ -1,24 +1,6 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
-
-The corpus has no image/audio files, so the binary payloads here are the
-UTF-8 bytes of each document (deterministic, driver-provided data only — we
-never synthesize external inputs). The POINT is the Spark-side plumbing a
-100 TB multimodal pipeline needs, and that part is real and tested:
-
-- binary columns (`BinaryType`) with a typed metadata struct carried beside
-  the payload (mime, n_bytes, checksum);
-- Arrow-batched decode / feature-extract via ``mapInPandas`` with a stable
-  output schema (`array<float>` features), the exact shape a real
-  image-decode (PIL/torchvision) or audio-decode (soundfile) UDF drops into;
-- the real decoders are gated behind try-imports and raise a clearly-marked
-  NotImplementedError in this container (libs absent); a deterministic fake
-  decode (byte-block means, "4×4 thumbnail") keeps the pipeline executable
-  and testable end-to-end.
-
-Scale notes (100 TB): payloads stay in the row as binary — never collected,
-never exploded; metadata-only queries prune the payload column entirely at
-the parquet scan (column pruning), which is the reason metadata lives in
-separate scalar columns instead of inside the blob.
+"""Multimodal operators (``multimodal_`` keys) over a binary table of
+synthetic media derived from the corpus: metadata, decode pipelines,
+frame sampling, chunk fingerprints and signal energy.
 """
 
 from __future__ import annotations
@@ -28,6 +10,7 @@ from pyspark.sql import functions as F
 
 from engine.registry import query
 from engine.tables import load
+
 
 THUMB = 4  # fake "thumbnail" is a 4×4 grid of byte-block means
 
@@ -278,4 +261,172 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("fr.s") / 4).cast("long").alias("frame_idx"),
         (F.col("fr.s") * 16).cast("long").alias("byte_offset"),
         F.col("fr.frame_md5").alias("frame_md5"),
+    )
+
+
+@query(
+    "multimodal_join",
+    oracle="""
+    SELECT label, count(*) AS n_docs,
+           round(avg(n_chars), 4) AS avg_chars,
+           min(doc_id) AS min_doc, max(doc_id) AS max_doc
+    FROM documents JOIN embeddings ON doc_id = vec_id
+    GROUP BY label
+    """,
+)
+def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Text↔embedding modality join (doc_id = vec_id; inner join because the
+    modalities scale differently at sf0.1 — FIXTURES), per-label doc stats."""
+    d = load(spark, sf_dir, "documents")
+    e = load(spark, sf_dir, "embeddings")
+    return (
+        d.join(e, d.doc_id == e.vec_id)
+        .groupBy("label")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.round(F.avg("n_chars"), 4).alias("avg_chars"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+        )
+    )
+
+
+@query(
+    "multimodal_chunk_fingerprint",
+    oracle="""
+    WITH docs AS (
+      SELECT doc_id, text, length(text) AS n
+      FROM documents WHERE doc_id % 4 = 0
+    ),
+    chunks AS (
+      SELECT doc_id, n, CAST(k AS INT) AS chunk_idx,
+             substr(text, k * 192 + 1, 256) AS chunk
+      FROM docs, unnest(range(0, ((n - 1) // 192) + 1)) AS t(k)
+    )
+    SELECT doc_id, chunk_idx,
+           CAST(length(chunk) AS INT) AS chunk_len,
+           md5(chunk) AS chunk_md5,
+           (chunk_idx = 0) AS is_first
+    FROM chunks
+    """,
+)
+def multimodal_chunk_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping chunk fingerprints: 256-byte windows with a 192-byte
+    stride (64-byte overlap) over each payload, one md5 per chunk — the
+    shingling step for payload-level near-dup detection and content-
+    addressed chunk storage (CDC-style indexing). Runs on the text bytes
+    here because the DuckDB oracle lacks BLOB substring/md5; the Spark
+    plan is type-generic — substring and md5 accept BinaryType unchanged
+    (the corpus is ASCII, so char offsets ARE byte offsets).
+
+    Plan: chunk offsets come from explode(sequence(...)) — codegen fan-out
+    with no shuffle at all; per-row output is ceil(n/192) chunks. At
+    100 TB this is embarrassingly parallel; the downstream group-by-md5
+    (not part of this key) would be the first shuffle."""
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 0)
+    n = F.length("text")
+    d = d.select(
+        "doc_id",
+        "text",
+        F.explode(F.sequence(F.lit(0), ((n - 1) / 192).cast("int"))).alias(
+            "chunk_idx"
+        ),
+    )
+    chunk = F.substring(
+        F.col("text"), F.col("chunk_idx") * 192 + 1, 256
+    )
+    return d.select(
+        "doc_id",
+        "chunk_idx",
+        F.length(chunk).cast("int").alias("chunk_len"),
+        F.md5(chunk).alias("chunk_md5"),
+        (F.col("chunk_idx") == 0).alias("is_first"),
+    )
+
+
+@query(
+    "multimodal_signal_energy",
+    oracle="""
+    WITH docs AS (
+      -- rid: the oracle explodes to per-sample rows and must re-aggregate
+      -- per SOURCE ROW, not per doc_id — a colliding id carrying two
+      -- different payloads (r14 dup-id axis) would otherwise merge two
+      -- frames' samples into one garbage energy
+      SELECT row_number() OVER (ORDER BY doc_id, text) AS rid,
+             doc_id, text, length(text) AS n
+      FROM documents WHERE doc_id % 6 = 0
+    ),
+    frames AS (
+      SELECT rid, doc_id, text, CAST(k AS INT) AS frame_idx,
+             CAST(k * 32 AS INT) AS off,
+             CAST(least(32, n - k * 32) AS INT) AS flen
+      FROM docs, unnest(range(0, ((n - 1) // 32) + 1)) AS t(k)
+    ),
+    samples AS (
+      SELECT rid, doc_id, frame_idx, flen,
+             ascii(substr(text, off + CAST(j AS INT), 1)) AS code
+      FROM frames, unnest(range(1, flen + 1)) AS u(j)
+    )
+    SELECT doc_id, frame_idx, flen,
+           CAST(max(code) AS INT) AS peak,
+           round(sqrt(CAST(sum(code * code) AS DOUBLE) / flen), 4) AS energy
+    FROM samples GROUP BY rid, doc_id, frame_idx, flen
+    """,
+)
+def multimodal_signal_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signal-frame feature extraction over an opaque byte payload: the
+    payload is framed into 32-byte windows and each frame yields RMS
+    energy and peak amplitude — the audio-feature shape (treating bytes as
+    samples) with a FULL oracle because the math is integer until one
+    sqrt. The real-codec twin (multimodal_decode_pipeline) stays
+    ROWS-gated; this key proves the framing/feature plumbing exactly.
+
+    Plan: Spark computes each frame's Σcode² with transform+aggregate —
+    a sequential in-array fold, zero row explosion and zero shuffle (the
+    oracle explodes to per-sample rows because DuckDB lacks the fold; both
+    reduce to identical integer sums). Output is one row per frame:
+    ceil(n/32) per doc."""
+    # r13 long-doc fix: the old shape exploded frame indices FIRST, copied
+    # the full text into every frame row, and substring'd per sample —
+    # substring(text, off + j, 1) is an O(offset) scan, so a long payload
+    # cost O(len²) per doc. The per-char code array is now bound ONCE per
+    # doc, each frame folds over an O(32) slice of it, and only the small
+    # (frame_idx, flen, peak, sumsq) structs are exploded.
+    d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 6 == 0)
+    # frame windows via O(1) element access, not slice() — slice inside a
+    # lambda runs interpreted and copies the whole code array per frame
+    frames = F.expr(
+        "transform(sequence(0, cast((size(cd) - 1) / 32 as int)),"
+        " k -> named_struct("
+        "   'frame_idx', k,"
+        "   'flen', cast(least(32, size(cd) - k * 32) as int),"
+        "   'peak', cast(array_max(transform("
+        "     sequence(k * 32, least(size(cd), k * 32 + 32) - 1),"
+        "     j -> cd[j])) as int),"
+        "   'sumsq', aggregate(transform("
+        "     sequence(k * 32, least(size(cd), k * 32 + 32) - 1),"
+        "     j -> cd[j]), 0L, (acc, x) -> acc + CAST(x AS BIGINT) * x)))"
+    )
+    return (
+        d.select(
+            "doc_id",
+            # empty text has NO frames (the oracle's range(0, (-1//32)+1)
+            # is empty); split('','') would be [''] (size 1), so gate to
+            # NULL — transform/sequence/explode of NULL emit nothing
+            F.expr(
+                "CASE WHEN text IS NULL OR length(text) = 0"
+                " THEN cast(NULL as array<int>)"
+                " ELSE transform(split(text, ''), c -> ascii(c)) END"
+            ).alias("cd"),
+        )
+        .select("doc_id", F.explode(frames).alias("fr"))
+        .select(
+            "doc_id",
+            F.col("fr.frame_idx").alias("frame_idx"),
+            F.col("fr.flen").alias("flen"),
+            F.col("fr.peak").alias("peak"),
+            F.round(
+                F.sqrt(F.col("fr.sumsq").cast("double") / F.col("fr.flen")), 4
+            ).alias("energy"),
+        )
     )

@@ -2,14 +2,16 @@
 builders and their DuckDB oracle SQL.
 
 Every operator module registers via the ``@query`` decorator; ``collect()``
-imports all operator modules and returns the populated maps. Keys without an
-oracle get the driver's weaker rows-only check (none since the r06
-graduations — every registered key now carries a FULL oracle).
+imports every module of the ``engine`` package, in name order, and returns
+the populated maps. Keys without an oracle get the driver's weaker
+rows-only check (none since the r06 graduations — every registered key
+now carries a FULL oracle).
 """
 
 from __future__ import annotations
 
 import importlib
+import pkgutil
 from collections.abc import Callable
 from typing import TYPE_CHECKING
 
@@ -26,85 +28,6 @@ ORACLES: dict[str, str] = {}
 
 # Built plans per (key, corpus file versions), scoped to the application.
 _PLANS = Cache(max_entries=4096)
-
-# Import order of the operator modules; it orders collect()'s keys after
-# the _ATTEST_FIRST head.
-_OPERATOR_MODULES = [
-    "engine.pipeops",
-    "engine.vecops",
-    "engine.extras2",
-    "engine.streaming",
-    "engine.curation",
-    "engine.sketches",
-    "engine.extras3",
-    "engine.multimodal",
-    "engine.functions",
-    "engine.udfs",
-    "engine.trainext",
-    "engine.etl",
-    "engine.extras",
-    "engine.analytics",
-    "engine.tpch_more",
-    "engine.relational",
-    "engine.aggs",
-    "engine.llmops",
-    "engine.textops",
-    "engine.simsearch",
-    "engine.windows",
-    "engine.datapipe",
-    "engine.scaleops",
-    "engine.sql4",
-    "engine.timeseries",
-    "engine.extras4",
-    "engine.extras5",
-    "engine.pipeline",
-    "engine.catalogops",
-    "engine.governance",
-    "engine.graphops",
-    "engine.curation2",
-    "engine.extras6",
-    "engine.retrieval",
-    "engine.sql5",
-    "engine.sinks2",
-    "engine.extras7",
-    "engine.extras8",
-    "engine.extras9",
-    "engine.extras10",
-    "engine.retrieval2",
-    "engine.pipeline2",
-    "engine.extras11",
-    "engine.extras12",
-    "engine.udfs2",
-    "engine.extras13",
-    "engine.extras14",
-    "engine.extras15",
-    "engine.extras16",
-    "engine.pipeline3",
-    "engine.extras17",
-    "engine.extras18",
-    "engine.extras19",
-    "engine.extras20",
-    "engine.pipeline4",
-    "engine.extras21",
-    "engine.streaming2",
-    "engine.extras22",
-    "engine.extras23",
-    "engine.extras24",
-    "engine.pipeline5",
-    "engine.extras25",
-    "engine.extras26",
-    "engine.extras27",
-    "engine.extras28",
-    "engine.extras29",
-    "engine.extras30",
-    "engine.extras31",
-    "engine.extras32",
-    "engine.extras33",
-    "engine.extras34",
-    "engine.pipeline6",
-    "engine.extras35",
-    "engine.extras36",
-]
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -201,8 +124,10 @@ _ATTEST_FIRST = [
 
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
-    for mod in _OPERATOR_MODULES:
-        importlib.import_module(mod)
+    import engine
+
+    for mod in sorted(m.name for m in pkgutil.iter_modules(engine.__path__)):
+        importlib.import_module(f"engine.{mod}")
     missing = [k for k in _ATTEST_FIRST if k not in QUERIES]
     if missing:
         raise KeyError(f"_ATTEST_FIRST names unregistered keys: {missing}")

@@ -83,7 +83,7 @@ def gram_stats(spark, sf_dir: str) -> tuple[int, str]:
     from pyspark.sql import functions as F
 
     from engine.tables import load
-    from engine.textops import _NGRAM_DF_CAP, explode_nonempty, word_ngram_ids
+    from engine.dedup import _NGRAM_DF_CAP, explode_nonempty, word_ngram_ids
 
     d = load(spark, sf_dir, "documents")
     inv = explode_nonempty(word_ngram_ids(d, 3), "s", "g")
@@ -104,7 +104,7 @@ def band_stats(spark, sf_dir: str) -> tuple[int, int, int]:
     pairs) over the minhash kernel's own banding."""
     from pyspark.sql import functions as F
 
-    from engine.llmops import LSH_BUCKET_CAP, lsh_band_rows, minhash_signatures
+    from engine.dedup import LSH_BUCKET_CAP, lsh_band_rows, minhash_signatures
     from engine.tables import load
 
     d = load(spark, sf_dir, "documents")

@@ -24,7 +24,7 @@ def test_ddl_table_idempotent_recreate(spark):
     double-append from the INSERT). Uses __wrapped__ so the second call
     genuinely re-executes the DDL instead of returning the registry
     wrapper's memoized plan."""
-    from engine.catalogops import sql_ddl_insert_view
+    from engine.sql import sql_ddl_insert_view
 
     fn = getattr(sql_ddl_insert_view, "__wrapped__", sql_ddl_insert_view)
     a = [tuple(r) for r in fn(spark, SF_DIR).collect()]
@@ -96,7 +96,7 @@ def test_lateral_topk_ties_short_and_empty_groups(spark, tmp_path):
     """LIMIT-2 tie-break must be deterministic (price DESC, then
     linenumber), a 1-row group yields 1 row, and a qualifying order with
     zero lineitems contributes nothing."""
-    from engine.catalogops import join_lateral_topk
+    from engine.relational import join_lateral_topk
 
     d = _micro_corpus_lateral(spark, tmp_path)
     fn = getattr(join_lateral_topk, "__wrapped__", join_lateral_topk)

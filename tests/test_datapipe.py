@@ -13,7 +13,7 @@ def test_bloom_prune_rejects_rows_and_keeps_all_matches(spark):
     """The Bloom pass must (a) reject a meaningful share of non-EUROPE
     orders (else it's a no-op) and (b) never reject a true match (no false
     negatives — the property the FULL oracle relies on)."""
-    from engine.datapipe import _BLOOM_K, _BLOOM_WORDS  # noqa: F401
+    from engine.relational import _BLOOM_K, _BLOOM_WORDS  # noqa: F401
     from engine.registry import collect
     from engine.tables import load
 

@@ -18,7 +18,7 @@ def test_spatial_grid_equals_brute_force(spark):
     """The grid-binned join must find EXACTLY the pairs the O(n*m)
     brute-force theta join finds — binning with r < cell size is lossless,
     and no pair appears twice despite the 9-cell replication."""
-    from engine.extras16 import _AX, _AY, _BX, _BY, _coord_col
+    from engine.relational import _AX, _AY, _BX, _BY, _coord_col
     from engine.tables import load
     from pyspark.sql import functions as F
 

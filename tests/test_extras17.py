@@ -45,7 +45,7 @@ def test_bootstrap_poisson_distribution(spark):
         assert abs(r["n_resampled"] - r["n_orig"]) <= 4 * max(r["n_orig"], 1) ** 0.5
         assert r["sum_resampled"] > 0
     # recompute the draw for every order and compare the group sums
-    from engine.extras17 import _POIS_CDF
+    from engine.relational import _POIS_CDF
 
     orders = load(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_orderpriority"

@@ -12,7 +12,7 @@ from tests.conftest import SF_DIR
 def test_heavy_hitters_equals_plain_aggregate(spark):
     """The sketch->recount pipeline must produce EXACTLY the rows a plain
     groupBy + HAVING produces (no false positives, no false negatives)."""
-    from engine.extras2 import agg_heavy_hitters
+    from engine.aggs import agg_heavy_hitters
     from engine.tables import load
 
     got = {
@@ -35,7 +35,7 @@ def test_heavy_hitters_equals_plain_aggregate(spark):
 def test_foreachbatch_upsert_equals_batch(spark):
     """Three replayed micro-batches merged through foreachBatch must equal
     the one-shot batch aggregate."""
-    from engine.extras2 import stream_foreachbatch_upsert
+    from engine.streaming import stream_foreachbatch_upsert
     from engine.tables import load
 
     got = {
@@ -59,7 +59,7 @@ def test_heavy_hitters_mg_vectorized_no_false_negatives():
     decrement step repeatedly, and hitters spread across small batches."""
     import pandas as pd
 
-    from engine.extras2 import _mg_partition_fn
+    from engine.aggs import _mg_partition_fn
 
     k = 5
     # 3 true hitters (100 occurrences each) diluted by 200 distinct
@@ -96,7 +96,7 @@ def test_foreachbatch_upsert_rebuilds_a_partial_replay_fixture(
     import os
     import shutil
 
-    import engine.extras2 as extras2
+    import engine.streaming as streaming
     from engine import tmpdirs
 
     corpus = tmp_path / "corpus"
@@ -111,8 +111,8 @@ def test_foreachbatch_upsert_rebuilds_a_partial_replay_fixture(
         return d
 
     monkeypatch.setattr(tmpdirs, "scratch_dir", recording)
-    monkeypatch.setattr(extras2, "scratch_dir", recording)
-    fn = extras2.stream_foreachbatch_upsert.__wrapped__
+    monkeypatch.setattr(streaming, "scratch_dir", recording)
+    fn = streaming.stream_foreachbatch_upsert.__wrapped__
     first = sorted(map(tuple, fn(spark, str(corpus)).collect()))
     replay = [d for d in created if os.path.exists(f"{d}/batch1.parquet")]
     assert len(replay) == 1

@@ -47,7 +47,7 @@ def test_named_window_running_value_consistent(spark):
 def test_checksum_reconcile_all_buckets_and_tamper(spark):
     """All 16 buckets reconcile; a simulated tampered copy (one price
     off by a cent) flips exactly that bucket's verdict."""
-    from engine.extras21 import _CK_P
+    from engine.etl import _CK_P
     from engine.tables import load
     from pyspark.sql import functions as F
 

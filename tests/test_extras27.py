@@ -21,7 +21,7 @@ def test_targeted_erasure_complete_and_partition_scoped(spark):
     """Erased users are gone everywhere; buckets WITHOUT erased users
     keep their original data files byte-for-byte (same paths, same
     mtimes) — the rewrite touched only the affected directories."""
-    from engine.extras27 import _ERASE_USERS
+    from engine.etl import _ERASE_USERS
     from engine.tables import load
     from pyspark.sql import functions as F
 
@@ -50,7 +50,7 @@ def test_targeted_erasure_complete_and_partition_scoped(spark):
 def test_erasure_leaves_unaffected_files_untouched(spark):
     """Re-run the key's mechanics with mtime tracking: files in
     unaffected buckets keep identical (path, mtime) before and after."""
-    from engine.extras27 import _ERASE_USERS
+    from engine.etl import _ERASE_USERS
     from engine.tables import load
     from pyspark.sql import functions as F
 

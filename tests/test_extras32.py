@@ -16,7 +16,7 @@ def _q(name):
 
 
 def test_shard_manifest_packing_invariants(spark):
-    from engine.extras32 import _SHARD_BYTES
+    from engine.etl import _SHARD_BYTES
     from engine.tables import load
     from pyspark.sql import functions as F
 

@@ -21,7 +21,7 @@ def test_ndcg_bounds_and_recompute(spark):
     from engine.tables import load
 
     rows = {r["query_id"]: r for r in _q("sim_eval_ndcg")(spark, SF_DIR).collect()}
-    from engine.extras33 import _NDCG_QUERIES
+    from engine.vectors import _NDCG_QUERIES
 
     assert set(rows) == set(_NDCG_QUERIES)
     emb = {

@@ -1,5 +1,5 @@
 """r14 hot-gram (boilerplate) defense for the exact gram-pair counter
-(engine.textops.exact_gram_pair_counts): A/B equivalence of the defended
+(engine.dedup.exact_gram_pair_counts): A/B equivalence of the defended
 light/hot/tiny split against the plain inverted-index join, with the cap
 forced low so EVERY branch (light completion, hot arrays, one-sided tiny
 pairs) actually executes — the real corpora never push a gram past the
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-import engine.textops as tx
+import engine.dedup as tx
 
 
 @pytest.fixture()

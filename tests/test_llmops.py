@@ -69,7 +69,7 @@ def test_minhash_deterministic(spark):
 
 def test_cosine_self_similarity(spark):
     """Embeddings are L2-normalized: self-dot == 1 +/- 1e-3."""
-    from engine.llmops import _dot
+    from engine.vectors import _dot
     from engine.tables import load
 
     emb = load(spark, SF_DIR, "embeddings")
@@ -98,7 +98,7 @@ def test_side_broadcast_cached_per_session_corpus(spark, tmp_path):
     old vectors to every blocked-matmul kernel."""
     import shutil
 
-    from engine.llmops import _side_broadcast
+    from engine.vectors import _side_broadcast
     from engine.tables import load
 
     emb = load(spark, SF_DIR, "embeddings")
@@ -128,7 +128,7 @@ def test_broadcast_side_keeps_double_source_precision(spark, tmp_path):
     pyarrow-direct path on a double-written copy of the corpus."""
     from pyspark.sql import functions as F
 
-    from engine.llmops import _broadcast_side
+    from engine.vectors import _broadcast_side
     from engine.tables import load
 
     base = load(spark, SF_DIR, "embeddings")

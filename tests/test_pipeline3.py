@@ -77,7 +77,7 @@ def test_component_losers_driver_vs_distributed_paths(spark):
     import pyspark.sql.functions as F
     import pyspark.sql.types as T
 
-    from engine import pipeline3 as p3
+    from engine import pipeline as p3
 
     kid_t = T.StructType(
         [

@@ -23,7 +23,7 @@ def test_ann_index_recall_and_shape(spark):
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append(r)
-    from engine.pipeline4 import _K, _QUERY_IDS
+    from engine.pipeline import _K, _QUERY_IDS
 
     assert set(by_q) == set(_QUERY_IDS)
     emb = {

@@ -60,7 +60,7 @@ def test_within_new_losers_distributed_matches_union_find(spark):
     components with nontrivial diameter, min-id keeper per component."""
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import _UNION_FIND_MAX_PAIRS, _within_new_losers
+    from engine.pipeline import _UNION_FIND_MAX_PAIRS, _within_new_losers
 
     chain = spark.range(1000 * 9).select(
         (F.col("id") % F.lit(9) + (F.col("id") / 9).cast("long") * 10).alias("a_id"),
@@ -106,7 +106,7 @@ def test_refresh_reads_only_index_and_new_batch(spark, tmp_path):
     the index base or the new-batch directory."""
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import build_refresh_index, refresh_against_index
+    from engine.pipeline import build_refresh_index, refresh_against_index
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -159,7 +159,7 @@ def test_decisions_partition_batch_and_roll_up_to_manifest(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from engine.pipeline6 import (
+    from engine.pipeline import (
         build_refresh_index,
         refresh_against_index,
         refresh_decisions,
@@ -207,8 +207,8 @@ def test_refresh_matches_reference_algebra_across_splits(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from engine.llmops import minhash_near_pairs
-    from engine.pipeline6 import build_refresh_index, refresh_against_index
+    from engine.dedup import minhash_near_pairs
+    from engine.pipeline import build_refresh_index, refresh_against_index
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -286,7 +286,7 @@ def test_refresh_shuffle_path_matches_broadcast_path(spark, tmp_path, monkeypatc
     manifest to be identical to the broadcast path's."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -317,7 +317,7 @@ def test_refresh_index_append_loop(spark, tmp_path):
     one a from-scratch rebuild over (old ∪ accepted-A) produces."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -332,7 +332,7 @@ def test_refresh_index_append_loop(spark, tmp_path):
     # The manifest aggregates per source; reconstruct A's doc-level
     # accepted set independently (same set algebra as the cross-split
     # reference test) to know exactly which docs to append.
-    from engine.llmops import minhash_near_pairs
+    from engine.dedup import minhash_near_pairs
 
     pairs = [
         (r["a_id"], r["b_id"])
@@ -413,7 +413,7 @@ def test_increment_artifacts_are_file_bounded(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -440,7 +440,7 @@ def test_torn_append_is_invisible_to_readers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -475,7 +475,7 @@ def test_compaction_restores_fresh_build_exactly(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -530,7 +530,7 @@ def test_manifest_survives_one_compaction(spark, tmp_path):
     FileNotFoundException."""
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -554,7 +554,7 @@ def test_append_warns_past_compaction_bound(spark, tmp_path, monkeypatch):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -576,7 +576,7 @@ def test_auto_compaction_bounds_increment_count(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -631,7 +631,7 @@ def test_failed_index_build_leaves_no_tmp_dir(spark, monkeypatch):
     ever see it — the cleanup has to happen on the failure path itself."""
     import pytest as _pytest
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
 
     fixtures, created = _fresh_fixtures(monkeypatch)
 
@@ -656,7 +656,7 @@ def test_torn_cache_entry_is_evicted_but_kept_on_disk(spark, monkeypatch):
     still lazily read the surviving parquet — the same grace the
     superseded-retention gives. No leak results: cached dirs are always
     scratch_dir allocations, removed by the exit sweep."""
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine import tmpdirs
 
     _, created = _fresh_fixtures(monkeypatch)
@@ -721,7 +721,7 @@ def test_append_waits_for_writer_lock(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
     from engine.tables import load
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "source", "text")
@@ -757,7 +757,7 @@ def test_writer_lock_times_out_loudly(tmp_path):
     pins the lock primitive itself against a real second process)."""
     import pytest
 
-    import engine.pipeline6 as p6
+    import engine.pipeline as p6
 
     base = str(tmp_path / "idx")
     os.makedirs(base)

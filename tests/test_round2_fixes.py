@@ -49,7 +49,7 @@ def test_tune_memo_skips_conf_roundtrips(spark):
 def test_slope_zero_variance_is_null():
     """Constant-quantity group -> slope NULL (regr_slope semantics), never a
     round(None) TypeError that would kill the whole query."""
-    from engine.udfs import _slope
+    from engine.aggs import _slope
 
     pdf = pd.DataFrame(
         {
@@ -107,13 +107,13 @@ def test_broadcast_side_gate_refuses_oversize(spark, monkeypatch):
     loudly (pointing at the IVF path), not collect unbounded data."""
     import pytest
 
-    import engine.llmops as llmops
+    import engine.vectors as vectors
     from engine.tables import load
 
-    monkeypatch.setattr(llmops, "_MAX_BROADCAST_VECTORS", 10)
+    monkeypatch.setattr(vectors, "_MAX_BROADCAST_VECTORS", 10)
     emb = load(spark, SF_DIR, "embeddings")
     with pytest.raises(RuntimeError, match="IVF"):
-        llmops._broadcast_side(spark, SF_DIR, emb)
+        vectors._broadcast_side(spark, SF_DIR, emb)
 
 
 def test_lit_table_escapes_backslash_and_rejects_nonfinite(spark):

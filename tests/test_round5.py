@@ -34,7 +34,7 @@ def test_pagerank_mass_conserved_and_deterministic(spark):
 def _bruteforce_triangles(spark, threshold_mult):
     """Driver-side exhaustive triangle membership over the same strong-edge
     derivation (25 nodes — exhaustive is cheap here)."""
-    from engine.graphops import _trade_edges
+    from engine.vectors import _trade_edges
 
     u = (
         _trade_edges(spark, SF_DIR)
@@ -75,7 +75,7 @@ def test_triangle_nonempty_at_loosened_gate(spark):
     above vacuous — so pin the NON-empty path on the real corpus too: at
     a 1.25×-mean gate this corpus must produce triangles, and they must
     still match the brute force exactly."""
-    from engine.graphops import _trade_edges, triangle_participation
+    from engine.vectors import _trade_edges, triangle_participation
 
     got = {
         r["n_nationkey"]: r["n_triangles"]
@@ -90,7 +90,7 @@ def test_triangle_pinned_fixture(spark):
     triangles (1,2,3) and (2,3,4) sharing edge (2,3); a weak pair (1,4)
     pruned by the mean gate; a self-loop dropped; and the (2,1)/(1,2)
     direction split collapsed into one undirected pair."""
-    from engine.graphops import triangle_participation
+    from engine.vectors import triangle_participation
 
     edges = spark.createDataFrame(
         [
@@ -251,7 +251,7 @@ def test_semdedup_matches_bruteforce_numpy(spark):
     cluster assignment (clusters from the shared Lloyd helper)."""
     import numpy as np
 
-    from engine.graphops import kmeans_assign
+    from engine.vectors import kmeans_assign
     from engine.tables import load
 
     a2 = {r["vec_id"]: r["cid"] for r in kmeans_assign(spark, SF_DIR).collect()}

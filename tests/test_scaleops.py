@@ -97,7 +97,7 @@ def test_pattern_match_agrees_with_direct_check(spark):
 
 def test_compaction_reduces_file_count(spark):
     from engine.registry import collect
-    from engine.scaleops import etl_compact_small_files
+    from engine.etl import etl_compact_small_files
 
     queries, _ = collect()
     queries["etl_compact_small_files"](spark, SF_DIR).collect()
@@ -148,7 +148,7 @@ def test_weighted_percentile_boundary_and_ties(spark, tmp_path):
     crossing must INCLUDE the crossing row (cw >= 0.5*tw), a single-row
     group is its own median, and tied prices resolve via the deterministic
     (price, orderkey, linenumber) cumulative order."""
-    from engine.scaleops import agg_weighted_percentile
+    from engine.aggs import agg_weighted_percentile
     from engine.tables import SCHEMAS
 
     rows = [

@@ -12,7 +12,7 @@ from tests.conftest import SF_DIR
 def test_hll_estimates_within_5pct_of_exact(spark):
     """Self-validating FULL shape (r04): every est_ok flag must hold, and the
     exact counts in the output must agree with an independent recomputation."""
-    from engine.sketches import agg_hll_sketch_merge
+    from engine.aggs import agg_hll_sketch_merge
     from engine.tables import load
 
     out = {
@@ -41,7 +41,7 @@ def test_hll_estimates_within_5pct_of_exact(spark):
 def test_hll_rows_deterministic(spark):
     """Union is order-blind: a second build over the same set must produce
     identical estimates (the stability the driver's rows-only check needs)."""
-    from engine.sketches import agg_hll_sketch_merge
+    from engine.aggs import agg_hll_sketch_merge
 
     a = agg_hll_sketch_merge(spark, SF_DIR).collect()
     b = agg_hll_sketch_merge(spark, SF_DIR).collect()

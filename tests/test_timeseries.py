@@ -87,7 +87,7 @@ def test_skew_kurtosis_sane_ranges(spark):
 def test_python_stream_source_offset_replay(spark):
     """readBetweenOffsets must re-serve a committed range identically —
     the exactly-once replay contract."""
-    from engine.extras4 import _register_seq_stream_source
+    from engine.fileio import _register_seq_stream_source
 
     _register_seq_stream_source(spark)
     from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: F401
