@@ -517,7 +517,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # MinHash-LSH kernel parameters, shared by the one-shot pair kernel below
-# and the persisted band index (engine.pipeline6): 16 bands x r=2 over 32
+# and the persisted band index (engine.pipeline): 16 bands x r=2 over 32
 # permutations mod p = 2^31-1 (so (a*h+b) % p never overflows int64), with
 # band buckets larger than 50 docs dropped as non-discriminative. A stored
 # index and a fresh signature pass MUST agree on all three or cross-side
@@ -683,7 +683,7 @@ def verify_near_pairs(
     survivors only.
 
     Any extra columns on ``cand`` beyond (a_id, b_id) ride through to the
-    output — pipeline6 tags candidates by gate and verifies both gates'
+    output — the refresh index tags candidates by gate and verifies both gates'
     candidates in ONE tree.
 
     ``detail=True`` additionally returns the exact per-pair evidence the
@@ -1237,7 +1237,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: swap the broadcast side for IVF buckets (sim_ann_ivf's layout)
     and run the identical block kernel per bucket. The broadcast side rides
-    llmops._broadcast_side: pyarrow-direct (no collect job) and LOUDLY
+    vectors._broadcast_side: pyarrow-direct (no collect job) and LOUDLY
     size-gated at ~1M vectors — past the gate the key refuses and points at
     the bucketed path rather than collecting unbounded data to the driver
     (round-1 verdict item 2).
@@ -1263,7 +1263,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = 8
 
     def block_pairs(batches):
-        try:  # per-worker cache of the f32 side (see llmops._side_value)
+        try:  # per-worker cache of the f32 side (see vectors._side_value)
             from engine.vectors import _side_value
 
             ids_all, m32 = _side_value(bc, side_key)

@@ -33,7 +33,7 @@ from engine.tmpdirs import scratch_dir
 def data_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split with per-language audit
     counts. The split key is the same engine-agnostic multiplicative hash as
-    sample_hash_repro (engine/analytics.py) — NOT df.randomSplit, which is
+    sample_hash_repro (engine/relational.py) — NOT df.randomSplit, which is
     seed- and partition-layout-dependent and therefore unreproducible across
     runs, engines, or cluster sizes. Any downstream system can re-derive the
     exact membership from doc_id alone.

@@ -873,7 +873,7 @@ def udtf_arrow_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the expansion factor (3×) happens INSIDE the Python worker per
     batch; only the already-filtered urgent rows reach Python (predicate
     stays JVM-side). The filtered input goes through spread_cpu
-    (engine/textops.py:43) before the lateral join: per-row Python eval
+    (engine/vectors.py) before the lateral join: per-row Python eval
     is the slow stage, and the selective filter collapses the small scan
     to one partition (sf0.1: 16k rows → 1 partition → one serial Python
     worker, ~4 s; spread across the session's cores the same eval runs

@@ -415,7 +415,7 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") == F.col("keeper"))
     )
     # CASE guard, not greatest(): sequence(1, 0) infers step -1 and yields
-    # [1, 0] (the extras5 trap) — short docs must map to an empty array.
+    # [1, 0] — short docs must map to an empty array.
     # Tokenize once into `t` per consumer (r06): Catalyst does not CSE the
     # repeated split(text) across the lambda scope, so the old inline form
     # re-split every row three times inside the shingle fan-out.
@@ -465,7 +465,7 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECRAWL_SHIFT = 100000
 
 
-# Shared with pipeline6's union-find gate: below this many near-dup pairs
+# Shared with the refresh index's union-find gate (_within_new_losers): below this many near-dup pairs
 # the component labeling runs as ONE bounded collect + driver union-find;
 # above it, the distributed min-label loop (identical keeper semantics).
 
@@ -736,7 +736,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8-12 jobs of pure round-trip latency for a pair list that is KBs.
     # Collect the pairs ONCE under the shared _UNION_FIND_MAX_PAIRS cap
     # and union-find in the driver (pipeline_incremental_refresh's
-    # accepted r07 pattern, pipeline6._within_new_losers); past the cap,
+    # accepted r07 pattern, _within_new_losers); past the cap,
     # fall back to the identical-semantics distributed min-label loop.
     # Keeper semantics are IDENTICAL by construction: the component
     # minimum under the struct (doc_id, source, h) ascending order with
@@ -1069,7 +1069,7 @@ def _within_new_losers(
     small graphs collect once into a driver union-find (path-halving;
     cheaper than 1+ distributed rounds when the pair list is KBs); past
     _UNION_FIND_MAX_PAIRS the pairs are never fully collected — the
-    shared Pregel min-label kernel (engine.trainext.min_label_components,
+    shared Pregel min-label kernel (engine.dedup.min_label_components,
     the dedup_cluster_components engine) labels them in O(diameter)
     shuffles. Guard mechanics: ``n_pairs_bound`` is a caller-provided
     UPPER bound on nn's row count (pipeline_incremental_refresh passes a
@@ -1266,7 +1266,7 @@ _COMPACT_WARN_INCREMENTS = 16
 
 def _current_gen(base: str) -> str | None:
     """Resolve the live generation directory via the CURRENT pointer file
-    (same atomic-pointer idiom as sink_atomic_publish, engine/extras28.py):
+    (same atomic-pointer idiom as sink_atomic_publish, engine/fileio.py):
     returns None when the index is absent, torn, or pre-publish."""
     try:
         with open(os.path.join(base, "CURRENT")) as fh:

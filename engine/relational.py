@@ -150,7 +150,7 @@ def sample_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB (r12 rewrite): source cardinality is ~20, so a plain
     partitionBy(source) row_number window serializes the corpus into ~20
-    single-threaded sorts. The exact rank instead uses scaleops' two-level
+    single-threaded sorts. The exact rank instead uses agg_weighted_percentile's two-level
     range-bucket pattern: per-source min/max hk splits the hash domain
     into 64 fixed-width buckets; a bucket-level cumulative COUNT over the
     ~20×64 partials yields each bucket's starting rank; the per-row

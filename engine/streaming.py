@@ -422,7 +422,7 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py."""
     s = read_events_stream(spark, sf_dir)
     # Watermark requires TimestampType (not NTZ) in streaming state ops.
-    # The event time is clamped into [epoch+1µs, 2262] (streaming2's
+    # The event time is clamped into [epoch+1µs, 2262] (the
     # _TS_FLOOR/_TS_HORIZON guard, r14 adversarial-timestamp axis): the
     # initial watermark is epoch zero with a STRICT late filter, so a
     # pre-1970 or exactly-epoch stamp is silently dropped from the first

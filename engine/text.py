@@ -56,7 +56,7 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r02 plan fixes (20 s → ~2 s warm at sf0.1): int64 gram ids, parallelized
     shingling, no duplicated transform in a pushed-down explode filter —
-    see engine.textops.word_ngram_ids / explode_nonempty."""
+    see engine.dedup.word_ngram_ids / explode_nonempty."""
     d = load(spark, sf_dir, "documents")
     # persisted: sh feeds three join inputs, and the joins push inferred
     # isnotnull filters into the gram projection, re-inlining split(text)
@@ -459,7 +459,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~20, so a plain partitionBy(source) running-sum window serializes
     the corpus into ~20 single-threaded sorts — the same parallelism
     ceiling the r11 agg_weighted_percentile rehearsal measured at
-    exponent 0.98. The cumsum instead uses scaleops' two-level
+    exponent 0.98. The cumsum instead uses agg_weighted_percentile's two-level
     range-bucket pattern: 64 doc_id buckets per source; a bucket-level
     cumsum over the ~20×64 partial sums (trivial window) yields each
     bucket's starting offset; the per-row window partitions by

@@ -797,7 +797,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
             raise RuntimeError(
                 f"embeddings has {n} vectors > broadcast budget "
                 f"{_MAX_BROADCAST_VECTORS}; use the bucketed IVF/LSH path "
-                "(engine.simsearch.sim_ann_ivf) for candidate generation"
+                "(sim_ann_ivf) for candidate generation"
             )
         t = pq.read_table(path, columns=["vec_id", "embedding"])
         # vector-family contract (engine.tables.vectors): NULL vectors are
@@ -839,7 +839,7 @@ def _broadcast_side(spark, sf_dir: str, emb) -> tuple:
             raise RuntimeError(
                 f"embeddings has {n} vectors > broadcast budget "
                 f"{_MAX_BROADCAST_VECTORS}; use the bucketed IVF/LSH path "
-                "(engine.simsearch.sim_ann_ivf) for candidate generation"
+                "(sim_ann_ivf) for candidate generation"
             )
         side = (
             emb.filter(F.col("embedding").isNotNull())
@@ -913,7 +913,7 @@ def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: broadcasting one full side stops scaling past ~1M vectors; the
     same per-block kernel then runs over LSH/IVF candidate buckets instead
-    (engine.simsearch), keeping this exact path as the per-bucket inner loop.
+    (sim_ann_rp_lsh, sim_ann_ivf), keeping this exact path as the per-bucket inner loop.
     """
     import numpy as np
     import pyarrow as pa
@@ -1085,10 +1085,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for SINGLE-LEVEL IVF all-pair mining; the engine's near-linear ANN
     path is sim_ann_rp_lsh (bucket-capped, 25× exponent 0.33).
 
-    r09 exact-dup collapse (same design as sim_ann_rp_lsh's r07 fix,
-    engine/vecops.py): a clone corpus routes every duplicate into the
-    same probe clusters — no (nlist, nprobe) choice can separate
-    identical vectors — and the r09 25× rehearsal measured exponent 1.13
+    r09 exact-dup collapse (same design as sim_ann_rp_lsh's r07 fix): a
+    clone corpus routes every duplicate into the same probe clusters — no
+    (nlist, nprobe) choice can separate identical vectors — and the r09 25× rehearsal measured exponent 1.13
     (1.5 s → 57 s) from dense blocks 25× taller. One cheap dup probe
     (footer rows vs countDistinct(xxhash64(embedding)); a collision only
     UNDER-counts, which routes to the collapse path whose grouping key
@@ -1096,7 +1095,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid/assign/search pipeline runs on min-id REPRESENTATIVES, then
     winning rep pairs expand to member pairs (members truncated to the
     k+1 smallest ids per group — decision-preserving for top-k under
-    (sim desc, a_id, b_id), same proof as vecops) and intra-group pairs
+    (sim desc, a_id, b_id), same proof as sim_ann_rp_lsh) and intra-group pairs
     (sim = ‖v‖², identical vectors) bypass IVF entirely. Dup-free
     corpora (every driver/test SF) take the original path bit-identically
     at the cost of the one probe job."""
@@ -1223,7 +1222,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_pairs = per_cluster.coalesce(1).dropDuplicates(["a_id", "b_id"])
     if grp is None:  # dup-free: reps ≡ vectors, nothing to expand
         return rep_pairs.orderBy(F.col("sim").desc(), "a_id", "b_id").limit(k)
-    # r09 expansion (same shape + proof as vecops.sim_ann_rp_lsh): each
+    # r09 expansion (same shape + proof as sim_ann_rp_lsh): each
     # winning rep pair carries its sim to every member combination of its
     # two dup groups (identical vectors ⇒ identical dots); intra-group
     # blocks are all-pairs of a group at sim = ‖v‖². Members are the k+1
@@ -1245,7 +1244,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vd = F.col("embedding").cast("array<double>")
     # bround (half-even) matches np.round in cluster_topk — one rounding
-    # mode for every sim this operator emits (vecops r07 note).
+    # mode for every sim this operator emits (sim_ann_rp_lsh's r07 note).
     normsq = F.bround(
         F.aggregate(
             F.zip_with(vd, vd, lambda x, y: x * y),
