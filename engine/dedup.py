@@ -545,7 +545,6 @@ def minhash_signatures(d: DataFrame) -> DataFrame:
     verification). This is the only stage that touches ``text``; a caller
     holding this output (or its parquet persistence — the refresh index)
     never re-shingles."""
-    from engine.dedup import explode_nonempty
     from engine.vectors import spread_cpu
 
     # Shingles are hashed INSIDE the transform (h0 = xxhash64 of the 5-gram)
@@ -1608,8 +1607,6 @@ def dedup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     this). 100 TB: audit tables like this are the governance artifact
     dedup ships with — attrition manifests say HOW MANY
     (pipeline_dedup_cascade), this says WHY each."""
-    from engine.dedup import minhash_near_pairs
-
     d = load(spark, sf_dir, "documents")
     pairs = minhash_near_pairs(d.select("doc_id", "text"), detail=True)
     meta = d.select(

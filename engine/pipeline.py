@@ -1527,7 +1527,6 @@ def _compact_impl(spark: SparkSession, base: str) -> None:
     gen = _current_gen(base)
     if gen is None:
         raise FileNotFoundError(f"no published refresh index under {base}")
-    from engine.pipeline import capped_lsh_band_rows
 
     tmp = tempfile.mkdtemp(dir=base, prefix=".gen-tmp-")
     spark.read.parquet(*_artifact_paths(gen, "exact")).distinct().write.parquet(
@@ -1577,7 +1576,6 @@ def _write_index_artifacts(
     there would throttle the expensive shingle pass itself, so the sig
     write repartitions instead (shuffling batch-sized rows to keep the
     compute wide)."""
-    from engine.pipeline import capped_lsh_band_rows
     from engine.dedup import minhash_signatures
 
     exact = accepted.select(F.md5("text").alias("h")).distinct()
@@ -1620,7 +1618,6 @@ def refresh_decisions(
     columns and the exact stage only (doc_id, hs)."""
     from pyspark import StorageLevel
 
-    from engine.pipeline import capped_lsh_band_rows
     from engine.dedup import lsh_self_candidates, minhash_signatures, verify_near_pairs
 
     gen = _current_gen(base)

@@ -430,8 +430,6 @@ def stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # year-9999 sentinel would poison the watermark (evicting all dedup
     # state) on any multi-batch replay. The clamp only feeds watermark
     # arithmetic; output columns carry no timestamp.
-    from engine.streaming import _TS_FLOOR, _TS_HORIZON
-
     s = s.withColumn(
         "ts",
         F.greatest(
@@ -699,7 +697,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day: the static side broadcasts per batch (refreshable dim); the
     aggregation state is O(segments). Complete output mode is fine because
     the result cardinality IS the segment count."""
-    from engine.streaming import _run_stream, read_events_stream
     from engine.tables import sftag
 
     s = read_events_stream(spark, sf_dir)

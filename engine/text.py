@@ -315,8 +315,6 @@ def text_keyword_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sort materialization."""
     from pyspark.sql.window import Window
 
-    from engine.text import _tokens
-
     d = load(spark, sf_dir, "documents")
     tok = _tokens(d)
     tf = tok.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))

@@ -291,8 +291,6 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = order[cumcount <= bucket_cap]
             yield pd.DataFrame({"bucket": buckets[keep], "vec_id": ids[keep]})
 
-    from engine.vectors import spread_cpu
-
     src = g.select("vec_id", "embedding") if g is not None else emb.select(
         "vec_id", "embedding"
     )
@@ -319,21 +317,19 @@ def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
 
-    # Path choice: footer-only row count vs the broadcast budget (read
-    # dynamically off the module so tests can force the scale path); the
+    # Path choice: footer-only row count vs the broadcast budget (a module
+    # global read at call time, so tests can force the scale path); the
     # count itself was already read above for the signature-width choice.
-    import engine.vectors as llmops
-
     n_vec = _n_vec  # None for non-parquet: can't prove it's small — join path
 
-    if n_vec is not None and n_vec <= llmops._MAX_BROADCAST_VECTORS:
+    if n_vec is not None and n_vec <= _MAX_BROADCAST_VECTORS:
         # Small-corpus fast path: one gather+einsum per Arrow batch against
         # the broadcast float32 matrix (reusing sim_topk_pairs' side; f32 is
         # the parquet source precision, upcast to f64 at the gather).
-        bc_side, side_key = llmops._side_broadcast(spark, sf_dir, emb)
+        bc_side, side_key = _side_broadcast(spark, sf_dir, emb)
 
         def pair_sims(batches):
-            try:  # per-worker cache of the f32 side (see llmops._side_value)
+            try:  # per-worker cache of the f32 side (see _side_value)
                 from engine.vectors import _side_value
 
                 ids, m = _side_value(bc_side, side_key)
@@ -510,8 +506,6 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "gram": pa.array([s[2].ravel().tolist()]),
             }
         )
-
-    from engine.vectors import spread_cpu
 
     parts = (
         spread_cpu(emb.select("embedding"), width=8)
@@ -2096,8 +2090,6 @@ def sim_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB each list would come from its own index (LSH/IVF for
     vectors, inverted index for terms) and the fusion stage is unchanged:
     RRF only needs ranks, never raw scores."""
-    from engine.vectors import _dot
-
     from engine.tables import vectors
 
     d = load(spark, sf_dir, "documents")
