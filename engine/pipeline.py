@@ -465,11 +465,31 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECRAWL_SHIFT = 100000
 
 
-# Shared with the refresh index's union-find gate (_within_new_losers): below this many near-dup pairs
-# the component labeling runs as ONE bounded collect + driver union-find;
-# above it, the distributed min-label loop (identical keeper semantics).
-
+# Below this many near-dup pairs the component labeling runs as ONE
+# bounded collect + driver union-find; above it, the distributed min-label
+# loop (identical keeper semantics).
 _UNION_FIND_MAX_PAIRS = 100_000
+
+
+def _union_find_losers(pairs, key=None) -> list:
+    """Path-halving union-find over (a, b) node pairs: every node except
+    its component's minimum under ``key``, in first-seen order."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = sorted((ra, rb), key=key)
+            parent[hi] = lo
+    return [x for x in parent if find(x) != x]
 
 
 def _nf_key(t):
@@ -494,25 +514,11 @@ def _component_losers(spark, pairs, kid_type):
 
     rows = pairs.limit(_UNION_FIND_MAX_PAIRS + 1).collect()
     if len(rows) <= _UNION_FIND_MAX_PAIRS:
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in rows:
-            a, b = tuple(r["a_id"]), tuple(r["b_id"])
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if _nf_key(ra) <= _nf_key(rb) else (rb, ra)
-                parent[hi] = lo
-        losers = [(x,) for x in parent if find(x) != x]
+        losers = _union_find_losers(
+            ((tuple(r["a_id"]), tuple(r["b_id"])) for r in rows), key=_nf_key
+        )
         schema = T.StructType([T.StructField("kid", kid_type)])
-        return spark.createDataFrame(losers, schema)
+        return spark.createDataFrame([(x,) for x in losers], schema)
 
     und = pairs.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
@@ -1087,22 +1093,7 @@ def _within_new_losers(
         elif n_pairs_bound is None:
             rows = nn.limit(_UNION_FIND_MAX_PAIRS + 1).collect()
     if rows is not None and len(rows) <= _UNION_FIND_MAX_PAIRS:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in rows:
-            a, b = r["a_id"], r["b_id"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        losers = [x for x in parent if find(x) != x]
+        losers = _union_find_losers((r["a_id"], r["b_id"]) for r in rows)
         if losers:
             return spark.createDataFrame([(x,) for x in losers], "doc_id long")
         return spark.createDataFrame([], "doc_id long")
