@@ -23,6 +23,7 @@ from engine.cache import fixture, replay_fixture
 from engine.dedup import LSH_BUCKET_CAP, lsh_band_rows
 from engine.registry import query
 from engine.tables import load, sftag
+from engine.text import _STOPWORDS
 from engine.tmpdirs import scratch_dir
 
 
@@ -310,9 +311,6 @@ def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("score").desc(), "doc_id", "chunk_idx")
         .limit(50)
     )
-
-
-_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
 
 @query(
