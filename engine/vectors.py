@@ -102,15 +102,9 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sim_ann_rp_lsh",
-    # FULL oracle (r04): signature bucketing is not SQL-expressible, but the
-    # exact top-10 pair list is — and the L=16 multi-probe configuration
-    # achieves recall 1.0 on this corpus deterministically (fixed PCG64
-    # hyperplanes, fixed data; verified at sf0.001 and sf0.01; the ≥0.8
-    # recall floor stays unit-tested in tests/test_vecops.py). A recall
-    # regression now surfaces as a driver hash mismatch.
-    oracle="""
+# Exact top-10 pair list: the oracle of sim_topk_pairs and of the two ANN
+# keys, whose recall on the corpus is 1.0 (see each key).
+_TOPK_PAIRS_SQL = """
     SELECT a_id, b_id, sim FROM (
       SELECT a.vec_id AS a_id, b.vec_id AS b_id,
              round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
@@ -119,7 +113,18 @@ def emb_scalar_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND len(a.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
         AND len(b.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
     ) ORDER BY sim DESC, a_id, b_id LIMIT 10
-    """,
+    """
+
+
+@query(
+    "sim_ann_rp_lsh",
+    # FULL oracle (r04): signature bucketing is not SQL-expressible, but the
+    # exact top-10 pair list is — and the L=16 multi-probe configuration
+    # achieves recall 1.0 on this corpus deterministically (fixed PCG64
+    # hyperplanes, fixed data; verified at sf0.001 and sf0.01; the ≥0.8
+    # recall floor stays unit-tested in tests/test_vecops.py). A recall
+    # regression now surfaces as a driver hash mismatch.
+    oracle=_TOPK_PAIRS_SQL,
 )
 def sim_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 similar pairs via random-hyperplane LSH (SimHash
@@ -873,16 +878,7 @@ def _dot(a, b):  # JVM-side higher-order dot product, float→double first
 
 @query(
     "sim_topk_pairs",
-    oracle="""
-    SELECT a_id, b_id, sim FROM (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE a.embedding IS NOT NULL AND b.embedding IS NOT NULL
-        AND len(a.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-        AND len(b.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-    ) ORDER BY sim DESC, a_id, b_id LIMIT 10
-    """,
+    oracle=_TOPK_PAIRS_SQL,
 )
 def sim_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 most-similar embedding pairs by cosine (≡ dot, vectors are
@@ -1051,16 +1047,7 @@ def spread_cpu(df: DataFrame, width: int | None = None) -> DataFrame:
     # verified at sf0.001 and sf0.01, recall floor separately unit-tested in
     # tests/test_simsearch.py). Comparing ANN output against the exact
     # answer turns any recall regression into a driver hash mismatch.
-    oracle="""
-    SELECT a_id, b_id, sim FROM (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-      FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-      WHERE a.embedding IS NOT NULL AND b.embedding IS NOT NULL
-        AND len(a.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-        AND len(b.embedding) = (SELECT len(embedding) FROM embeddings WHERE embedding IS NOT NULL GROUP BY 1 ORDER BY count(*) DESC, len(embedding) LIMIT 1)
-    ) ORDER BY sim DESC, a_id, b_id LIMIT 10
-    """,
+    oracle=_TOPK_PAIRS_SQL,
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 similar pairs via IVF: nlist deterministic
