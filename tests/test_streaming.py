@@ -186,7 +186,10 @@ def test_derived_stream_parts_scales_with_source(spark):
     ceiling-clamped by the session's parallelism so the derivation never
     out-scales the cluster. SPARK_GRAFT_STREAM_PARTS (applied in
     _run_stream, not here) still wins over every derived value."""
-    from engine.streaming import _STREAM_ROWS_PER_INSTANCE, _derived_stream_parts
+    from engine.streaming import (
+        _STREAM_ROWS_PER_INSTANCE,
+        _derived_stream_parts,
+    )
 
     assert _derived_stream_parts(spark, "/root/testdata/sf0.1") == 4
     # small corpora clamp to the parallel-headroom floor
